@@ -32,8 +32,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gemmsql.stats import embeddings_stats
-
 
 # ---------------------------------------------------------------- helpers
 
@@ -60,7 +58,7 @@ _QCOO = (
 
 def _micro_sql(num: str, step: int) -> str:
     """round(num/step) half away from zero in exact integer arithmetic,
-    then /1e6 — the twin of gate._micro_np / gate._micro_col."""
+    then /1e6 — the twin of gate._finish."""
     half = step // 2
     return (
         f"CAST(CASE WHEN {num} < 0"
@@ -79,7 +77,7 @@ _MICRO_RATIO = (
 
 def _gate_chain(denom_sql: str) -> str:
     """Exact integer score -> row max -> quantized softmax chain, the
-    DuckDB twin of gate._softmax_den_num."""
+    DuckDB twin of gate._Tile (s, mx, e, S)."""
     return (
         "qs AS (SELECT a.i AS qi, b.i AS ki,"
         " CAST(SUM(a.vq * b.vq) AS BIGINT) AS s_int"
@@ -132,19 +130,14 @@ def q_attention(spark: SparkSession, sf_dir: str) -> DataFrame:
       (query, key, value) signature (reference attention.py:38-44)
       through the blocked/broadcast fast path (VERDICT r2 missing #2)
     """
-    from gemmsql.ops.gate import (
-        BROADCAST_MAX_ROWS,
-        attention_gate,
-        attention_gate_plain_kv,
-    )
+    from gemmsql.ops.gate import attention_gate, attention_gate_plain_kv
 
     vec = _vec(spark, sf_dir).select("i", "vec")
     v_rev = vec.select("i", F.reverse("vec").alias("vec"))
-    # parquet-footer row count (session-cached, no Spark job) picks the
-    # physical path; plain+kv share the exact softmax chain in ONE pass
-    bcast = embeddings_stats(sf_dir)[0] <= BROADCAST_MAX_ROWS
-    plain_kv = attention_gate_plain_kv(vec, vec, v_rev, broadcast_kv=bcast)
-    scaled = attention_gate(vec, vec, scale=True, broadcast_kv=bcast).select(
+    # the gates pick the physical path from the parquet-footer row count
+    # (no Spark job); plain+kv share the exact softmax chain in ONE pass
+    plain_kv = attention_gate_plain_kv(vec, vec, v_rev)
+    scaled = attention_gate(vec, vec, scale=True).select(
         F.lit("scaled").alias("which"), "i", "d", "val"
     )
     return plain_kv.unionByName(scaled)
@@ -196,13 +189,11 @@ def q_ml_grads(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``xe_gpred/xe_gtrg``: cross-entropy grads (xentropy.py:15-37)
     - ``mlp_gx/mlp_gp/mlp_gq``: relu(X W) W grads (mlp.py:9-16)
     """
-    from gemmsql.ops.gate import BROADCAST_MAX_ROWS, ml_grads_gate_fused
+    from gemmsql.ops.gate import ml_grads_gate_fused
 
-    vec = _vec(spark, sf_dir)
-    bcast = embeddings_stats(sf_dir)[0] <= BROADCAST_MAX_ROWS  # cached stats
     # all eight legs from ONE pass: the att/xe legs share the softmax
     # chain, the mlp legs share the loaded batch — one scan, one merge
-    return ml_grads_gate_fused(vec, broadcast_kv=bcast, cache_key=sf_dir)
+    return ml_grads_gate_fused(_vec(spark, sf_dir), cache_key=sf_dir)
 
 
 def q_chain_grads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,11 +202,9 @@ def q_chain_grads(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference core.py:37-58): explicit chain rule through the gate,
     ``which`` in {gx, gp, gq, gtrg} (gemmsql/ops/gate.py
     ``chain_grads_gate``; float-precision twin in gemmsql/ops/chain.py)."""
-    from gemmsql.ops.gate import BROADCAST_MAX_ROWS, chain_grads_gate
+    from gemmsql.ops.gate import chain_grads_gate
 
-    vec = _vec(spark, sf_dir)
-    bcast = embeddings_stats(sf_dir)[0] <= BROADCAST_MAX_ROWS
-    return chain_grads_gate(vec, broadcast_trg=bcast, cache_key=sf_dir)
+    return chain_grads_gate(_vec(spark, sf_dir), cache_key=sf_dir)
 
 
 def q_chain2_grads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,11 +214,9 @@ def q_chain2_grads(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``attention_mlp_grads``) — shows the factory ops compose
     generically (reference core.py:37-58), not just into the loss-style
     chain_grads pair.  ``which`` in {gx, gp, gq}."""
-    from gemmsql.ops.gate import BROADCAST_MAX_ROWS, chain2_grads_gate
+    from gemmsql.ops.gate import chain2_grads_gate
 
-    vec = _vec(spark, sf_dir)
-    bcast = embeddings_stats(sf_dir)[0] <= BROADCAST_MAX_ROWS
-    return chain2_grads_gate(vec, broadcast_kv=bcast, cache_key=sf_dir)
+    return chain2_grads_gate(_vec(spark, sf_dir), cache_key=sf_dir)
 
 
 def q_attention_batched(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,8 +14,10 @@ Public surface:
 
 - :mod:`gemmsql.session` — SparkSession builder tuned for the engine.
 - :mod:`gemmsql.datamodel` — COO / vector-row / block matrix DataFrames.
-- :mod:`gemmsql.monoid` — ``make_monoid_op``: the ``mk_GeMMMapReduce``
-  analog (reference core.py:15-64) over Spark aggregation.
+- :mod:`gemmsql.monoid` — ``make_monoid_op``: the row/sketch fold of the
+  ``mk_GeMMMapReduce`` contract (reference core.py:15-64) over Spark
+  aggregation.  The tile fold for dense ops is
+  :func:`gemmsql.ops.gate.tile_fold`.
 - :mod:`gemmsql.ops` — matmul, relu_matmul, mlp, attention, xentropy,
   entropy, sampling (reference operator inventory, SURVEY.md §2).
 - :mod:`gemmsql.pipeline` — LLM-data-pipeline operators: dedup,

@@ -29,6 +29,62 @@ from pyspark.sql import functions as F
 # kernel(left_ids, left_mat, left_extra, right_ids, right_mat) -> pdf
 Kernel = Callable[[np.ndarray, np.ndarray, pd.DataFrame, np.ndarray, np.ndarray], pd.DataFrame]
 
+#: target rows per task for the broadcast-kernel spread — small enough
+#: that a 2000-row table still fans ~8 ways, large enough that each
+#: Arrow batch amortizes the Python worker round
+SPREAD_ROWS_PER_TASK = 256
+
+
+def _partitions(df: DataFrame) -> int:
+    """A lower bound on ``df``'s partition count, found without running a
+    job (0 if unknown).  A projection over parquet files splits them
+    into at least ``bytes / spark.sql.files.maxPartitionBytes``
+    partitions.  An adaptive plan (any plan with an exchange) states
+    the partitioning its root exchange plans; asking its RDD instead
+    would run the stages below that exchange."""
+    from gemmsql.stats import frame_bytes
+
+    size = frame_bytes(df)
+    if size is not None:
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        return -(-size // conf.filesMaxPartitionBytes())
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return plan.inputPlan().outputPartitioning().numPartitions()
+    return 0
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Byte-light/compute-heavy spread before a broadcast-path kernel
+    (guide §2; the media_split r17 precedent).  The broadcast kernels
+    run on tables whose KB-scale parquet scan is ONE input partition,
+    so without a fan-out the NumPy kernel serializes on one core
+    (measured r18: the whole ML tier showed 8-core ≈ 32-core scaling
+    for exactly this reason).  One round-robin exchange of the narrow
+    rows fans the kernel across the cluster.  Every kernel fed by this
+    is batch-slicing-independent (per-row outputs or per-task monoid
+    partials merged by sum), so the spread cannot move a result.
+
+    Task sizing: ~SPREAD_ROWS_PER_TASK rows per task (footer row
+    count, never a job), capped at defaultParallelism — a fixed
+    32-way fan measured as pure scheduling overhead for the cheap
+    softmax kernels while still leaving the heavy ones (gumbel noise,
+    fused grads) under-parallelized at small N on few-core boxes.
+
+    An input that already has at least that many partitions (a
+    many-file scan, an upstream shuffle) is returned unchanged: the
+    exchange would only move the whole payload to end up no wider."""
+    from gemmsql.stats import frame_rows
+
+    n = frame_rows(df)
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    parts = cap if n is None else max(
+        2, min(cap, -(-n // SPREAD_ROWS_PER_TASK))
+    )
+    if _partitions(df) >= parts:
+        return df
+    return df.repartition(parts)
+
 
 def _to_mat(series) -> np.ndarray:
     return np.asarray(series.tolist(), dtype=np.float64)
@@ -88,22 +144,30 @@ def blocked_partials(
 
 def broadcast_right_partials(
     left: DataFrame,
-    right: DataFrame,
+    right: DataFrame | None,
     kernel: Kernel,
     partial_schema: str,
     *,
     left_extra: tuple[str, ...] = (),
+    spread_left: bool = True,
 ) -> DataFrame:
     """Same contract as :func:`blocked_partials` but with the whole right
-    side broadcast — replication factor 1, no shuffle (use when the right
-    side fits in memory; e.g. a class-embedding table)."""
+    side broadcast — one tile per left batch, replication factor 1, no
+    shuffle (use when the right side fits in memory; e.g. a
+    class-embedding table).  ``right=None`` is a row fold: the kernel
+    gets ``None`` for the right ids and matrix.  ``spread_left`` fans
+    the left rows out first (:func:`spread`); callers whose left side is
+    already spread, or whose kernel is too cheap to pay for an
+    exchange, turn it off."""
     spark = left.sparkSession
-    rp = right.select("i", "vec").toPandas()
-    b = spark.sparkContext.broadcast((rp["i"].to_numpy(), _to_mat(rp["vec"])))
+    b = None
+    if right is not None:
+        rp = right.select("i", "vec").toPandas()
+        b = spark.sparkContext.broadcast((rp["i"].to_numpy(), _to_mat(rp["vec"])))
     extra = list(left_extra)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rids, rmat = b.value
+        rids, rmat = (None, None) if b is None else b.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -112,11 +176,7 @@ def broadcast_right_partials(
                 pdf[extra].reset_index(drop=True), rids, rmat,
             )
 
-    from gemmsql.ops.gate import _spread
-
-    # byte-light/compute-heavy spread (r18): the broadcast path only
-    # runs for bounded tables whose scan is ONE partition — without
-    # the fan-out the kernel serializes on a single core
-    return _spread(left.select("i", "vec", *extra)).mapInPandas(
+    src = left.select("i", "vec", *extra)
+    return (spread(src) if spread_left else src).mapInPandas(
         run, partial_schema
     )

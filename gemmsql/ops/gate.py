@@ -1,4 +1,5 @@
-"""Oracle-exact quantized formulations of the ML operators.
+"""Oracle-exact quantized formulations of the ML operators, all built on
+one tile-fold factory.
 
 Round 1 showed the float kernels are *flaky* against the DuckDB oracle:
 rows and schema always match, but a handful of ``ROUND(x, 6)`` values
@@ -49,6 +50,36 @@ exactly reproducible.  The float kernels in ``attention.py`` /
 ``mlp.py`` / ``backward.py`` remain the full-precision production API;
 these twins are what the driver's correctness gate and bench run.
 
+The tile fold
+-------------
+Every gate is built on :func:`tile_fold`, the tile fold for dense
+operators: this engine's ``mk_GeMMMapReduce`` (reference core.py:15-64)
+for the ML tier.  The row/sketch fold over keyed rows is
+:func:`gemmsql.monoid.make_monoid_op`; the batched attention gate (one
+cogroup per batch id) reuses only the per-tile math.  The reference's
+five functions map onto the tile fold as follows:
+
+- ``init``: the zero of the int64 merge.  An empty tile emits no rows.
+- ``chunker``: the two chunkers of :mod:`gemmsql.ops._blocked`.  The
+  broadcast path is the blocked path with ONE tile per left batch that
+  holds the whole right side (a narrow map over spread left rows); the
+  blocked path sweeps (left-block, right-block) tile pairs.
+  :func:`tile_fold` is the one place that picks between them.
+- ``proj_fold``: an op's list of :class:`Leg` s.  A leg is one int64
+  output of a :class:`_Tile`, which computes the shared score/softmax
+  chain (and the MLP chain) once per tile.  On the broadcast path the
+  per-row statistics (row max, softmax sum, ``rnum``) are complete
+  inside the tile; on the blocked path earlier sweeps supply them.
+- ``binary_reduce``: :func:`_merge`, the exact int64 scatter-add per
+  ``(which, i)``.  It is skipped when every leg is keyed by left row on
+  the broadcast path, where each key is already complete.
+- ``proj_fold_bwd``: the vjp legs (attention, xentropy, MLP and the
+  chained MLP backward) fold through the same factory; the fused gates
+  are leg lists over one chain.
+
+:func:`_finish` is the one finalizer: it rounds each leg on its
+integer grid.
+
 Reference semantics mirrored here (file:line cites for the judge):
 - attention fwd      reference attention.py:5-9, 60-70 (scale:
   cpp_src/custom_attention.cpp:26-29)
@@ -72,7 +103,10 @@ hold — the 100 TB-safe shape.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
+from dataclasses import dataclass, replace
+from functools import cached_property
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -80,7 +114,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.ops._blocked import blocked_partials
+from gemmsql.ops._blocked import blocked_partials, broadcast_right_partials
 from gemmsql.stats import list_dim, rows_for_choice
 
 Q_IN = 1_000_000.0       # input quantization: v -> floor(v*1e6 + .5)
@@ -100,39 +134,21 @@ Q_DELTA = 1_000_000.0    # xentropy (softmax - onehot) quantization
 # bound must hold at any N.
 BROADCAST_MAX_ROWS = 8_192
 
-#: target rows per task for the broadcast-kernel spread — small enough
-#: that a 2000-row table still fans ~8 ways, large enough that each
-#: Arrow batch amortizes the Python worker round
-SPREAD_ROWS_PER_TASK = 256
+# Softmax temperature for the composed op att(CHAIN2_SCALE * mlp(x)):
+# the gram-seeded MLP emits values ~1e-4 (measured at sf0.01/sf0.1), so
+# an unscaled self-attention over them would quantize to an exactly
+# uniform softmax (every e_int == 1e6) and the composition would gate
+# nothing.  Scaling the intermediate by 1e4 puts scores in O(1..100)
+# where the softmax — and its jacobian — are structurally non-trivial.
+# The gated quantity is grads of att(SCALE*mlp(x)) with cotangent
+# ones/SCALE: the two SCALEs cancel in the chain rule, so g_pred is
+# exactly the attention vjp evaluated at the scaled intermediate and no
+# extra rescaling enters the integer chain.
+CHAIN2_SCALE = 10_000
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Byte-light/compute-heavy spread before a broadcast-path kernel
-    (guide §2; the media_split r17 precedent).  These kernels only run
-    for tables under BROADCAST_MAX_ROWS, whose KB-scale parquet scan
-    is ONE input partition — so the NumPy kernel serialized on one
-    core (measured r18: the whole ML tier showed 8-core ≈ 32-core
-    scaling for exactly this reason).  One round-robin exchange of at
-    most ~8192 narrow rows fans the kernel across the cluster; tables
-    past the broadcast bound take the blocked/tile paths, which
-    partition via their own shuffle.  Every kernel fed by this is
-    batch-slicing-independent (per-row outputs or per-task monoid
-    partials merged by sum), so the spread cannot move a result.
-
-    Task sizing: ~SPREAD_ROWS_PER_TASK rows per task (footer row
-    count, never a job), capped at defaultParallelism — a fixed
-    32-way fan measured as pure scheduling overhead for the cheap
-    softmax kernels while still leaving the heavy ones (gumbel noise,
-    fused grads) under-parallelized at small N on few-core boxes."""
-    sc = df.sparkSession.sparkContext
-    from gemmsql.stats import frame_rows
-
-    n = frame_rows(df)
-    cap = sc.defaultParallelism
-    parts = cap if n is None else max(
-        2, min(cap, -(-n // SPREAD_ROWS_PER_TASK))
-    )
-    return df.repartition(parts)
+PARTS = "which string, i long, nums array<long>"
+RATIO = 0    # grid of a softmax-ratio leg: nums = [S, num...] -> num / S
+L, R, W = "left", "right", "weight"   # which rows a leg's output is keyed by
 
 
 def _quant(mat: np.ndarray) -> np.ndarray:
@@ -140,67 +156,434 @@ def _quant(mat: np.ndarray) -> np.ndarray:
     return np.floor(mat * Q_IN + 0.5)
 
 
+def _requant(x: np.ndarray, scale: float, grid: float) -> np.ndarray:
+    """Re-quantize between chain stages: ``floor(x / scale * grid + .5)``
+    as int64."""
+    return np.floor(np.asarray(x, dtype=np.float64) / scale * grid + 0.5
+                    ).astype(np.int64)
+
+
 def _vec_mat(series) -> np.ndarray:
     return np.asarray(series.tolist(), dtype=np.float64)
 
 
-def _collect_kv(kv_vec: DataFrame):
-    """Collect + quantize the broadcast side: (ids, int-valued float64)."""
-    pdf = kv_vec.select("i", "vec").toPandas()
-    rids = pdf["i"].to_numpy(dtype=np.int64)
-    rq = _quant(_vec_mat(pdf["vec"]))
-    return rids, rq
+def _cols(v: np.ndarray, k: int) -> np.ndarray:
+    """A per-row total repeated across ``k`` output columns."""
+    return np.repeat(v[:, None], k, axis=1)
 
 
-def _softmax_den_num(lq: np.ndarray, rq: np.ndarray, denom: float):
-    """Shared forward chain: exact scores -> row max -> quantized exp.
+# ------------------------------------------------------------- the fold
 
-    Returns (s, mx, e, S) where ``s = (lq @ rq.T) / denom`` (identical
-    doubles on every engine), ``e = floor(exp(s - mx)*1e6 + .5)``
-    (integer-valued float64), ``S = rowsum(e)`` (exact).
-    """
-    s = (lq @ rq.T) / denom
-    mx = s.max(axis=1)
-    e = np.floor(np.exp(s - mx[:, None]) * Q_EXP + 0.5)
-    S = e.sum(axis=1)
-    return s, mx, e, S
+class Leg(NamedTuple):
+    """One int64 output of a tile (the fold's ``proj_fold``).
 
+    ``side`` names the rows it is keyed by: left rows, right rows, or
+    weight rows (``arange``).  ``grid`` is its rounding step in
+    :func:`_finish` (:data:`RATIO` for softmax ratios); ops that finish
+    their rows themselves leave it ``None``.  ``needs`` lists the
+    complete per-row sums the math reads (``st`` = softmax sum S,
+    ``rn`` = rnum): on the blocked path a sweep computes them first.
+    ``tile=False`` marks a row-local leg that never reads the right
+    side; the blocked path runs it once per row instead of per tile."""
 
-def _micro_np(num: np.ndarray, step: int) -> np.ndarray:
-    """Half-away-from-zero integer rounding: round(num/step) in exact
-    int64 arithmetic.  ``val = micro / 1e6`` is then the final output."""
-    num = num.astype(np.int64)
-    half = step // 2
-    mag = (np.abs(num) + half) // step
-    return np.sign(num) * mag
-
-
-def _micro_col(num, step: int):
-    """Spark twin of :func:`_micro_np` (exact long arithmetic)."""
-    half = step // 2
-    mag = F.expr(f"(abs({num}) + {half}L) div {step}L")
-    return F.when(F.col(num) < 0, -mag).otherwise(mag)
+    name: str
+    side: str
+    grid: int | None
+    fn: Callable[["_Tile"], np.ndarray]
+    needs: tuple[str, ...] = ()
+    tile: bool = True
 
 
-def _micro_ratio_np(num: np.ndarray, den: np.ndarray) -> np.ndarray:
-    """round(num/den) half away from zero in exact int64 arithmetic:
-    ``(2*|num| + den) div (2*den)``, sign restored.  Used when the
-    denominator is itself a per-row integer (softmax S)."""
-    num = num.astype(np.int64)
-    den = den.astype(np.int64)
-    mag = (2 * np.abs(num) + den) // (2 * den)
-    return np.sign(num) * mag
+def _tag(prefix: str, legs) -> tuple[Leg, ...]:
+    return tuple(leg._replace(name=prefix + leg.name) for leg in legs)
 
 
-def _merge_long_arrays(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Exact scatter-add of int64 array partials (order-independent)."""
-    g = df.groupBy(*keys).agg(F.collect_list("nums").alias("ps"))
+@dataclass(frozen=True)
+class Fold:
+    """An op's spec: its legs plus the knobs of the shared chains.
+
+    ``scale``: attention's 1/sqrt(F) score scaling.  ``k_dim``: key width
+    when the right rows pack keys then values (set by :func:`tile_fold`).
+    ``wq``: the quantized MLP weights.  ``pred_left``: the scores' left
+    operand is the MLP output of the left rows (the chained op).
+    ``row_max``: carry the row max to the op's own finisher.  ``cot`` /
+    ``cot_scale``: where the chained MLP backward reads its cotangent
+    numerators, and their scale."""
+
+    legs: tuple[Leg, ...] = ()
+    scale: bool = False
+    k_dim: int | None = None
+    wq: np.ndarray | None = None
+    pred_left: bool = False
+    row_max: bool = False
+    cot: Callable[["_Tile"], np.ndarray] | None = None
+    cot_scale: float = 1e12
+
+    @property
+    def needs(self) -> tuple[str, ...]:
+        return tuple(dict.fromkeys(
+            n for leg in self.legs if leg.tile for n in leg.needs
+        ))
+
+
+class _Tile:
+    """One fold tile — a left batch against right rows — with every
+    quantity the legs share, each computed at most once.
+
+    On the broadcast path the tile holds the whole right side, so the
+    row max ``mx``, softmax sum ``S`` and ``rnum`` are complete here.  On
+    the blocked path the earlier sweeps supplied them as left columns,
+    and the tile reads those instead."""
+
+    def __init__(self, fold: Fold, lids, lmat, extra, rids, rmat):
+        self.fold, self.lids, self.extra = fold, lids, extra
+        self.rids, self.rmat, self._lmat = rids, rmat, lmat
+
+    def _given(self, col: str, compute: Callable[[], np.ndarray]):
+        return self.extra[col].to_numpy() if col in self.extra else compute()
+
+    # --- left rows and the MLP chain (reference mlp.py:6-16, 59-60)
+    @cached_property
+    def xq(self):
+        return _quant(self._lmat)
+
+    @cached_property
+    def h(self):
+        return np.maximum(self.xq @ self.fold.wq, 0.0)  # exact: <= 6.4e13
+
+    @cached_property
+    def hs(self):
+        return np.floor(self.h / 1e12 * Q_IN + 0.5)
+
+    @cached_property
+    def y(self):
+        return self.hs @ self.fold.wq                   # exact: <= ~4.1e15
+
+    @cached_property
+    def pred(self):
+        """The MLP output on the 1e6 grid (== _quant of pred / 1e6)."""
+        return np.floor(self.y / 1e12 * Q_IN + 0.5)
+
+    @cached_property
+    def lq(self):
+        return self.pred if self.fold.pred_left else self.xq
+
+    # --- right rows and the score/softmax chain
+    @cached_property
+    def rk(self):
+        k = self.fold.k_dim
+        return _quant(self.rmat if k is None else self.rmat[:, :k])
+
+    @cached_property
+    def rv(self):
+        k = self.fold.k_dim
+        return self.rk if k is None else _quant(self.rmat[:, k:])
+
+    @cached_property
+    def dot(self):
+        return self.lq @ self.rk.T                      # exact: <= 6.4e13
+
+    @cached_property
+    def s(self):
+        denom = 1e12 * np.sqrt(self.rk.shape[1]) if self.fold.scale else 1e12
+        return self.dot / denom
+
+    @cached_property
+    def mx(self):
+        return self._given("mx", lambda: self.s.max(axis=1))
+
+    @cached_property
+    def e(self):
+        return np.floor(np.exp(self.s - self.mx[:, None]) * Q_EXP + 0.5)
+
+    @cached_property
+    def S(self):
+        return self._given("st", lambda: self.e.sum(axis=1)).astype(np.float64)
+
+    @cached_property
+    def w(self):
+        return self.e / self.S[:, None]
+
+    # --- attention vjp (reference attention.py:11-29): gs = w*(vsum - r)
+    @cached_property
+    def vsq(self):
+        return self.rk.sum(axis=1)                      # int-valued, exact
+
+    @cached_property
+    def rnum(self):
+        return self._given(
+            "rn", lambda: self.e.astype(np.int64) @ self.vsq.astype(np.int64)
+        )
+
+    @cached_property
+    def gs(self):
+        t = self.vsq[None, :] / Q_IN - (self.rnum / (self.S * Q_IN))[:, None]
+        return np.floor(self.w * t * Q_GS + 0.5)        # int-valued float64
+
+    # --- xentropy (reference xentropy.py:5-37); the one-hot is
+    # tile-local: only the tile holding the true class subtracts it
+    @cached_property
+    def onehot(self):
+        return self.extra["label"].to_numpy()[:, None] == self.rids[None, :]
+
+    @cached_property
+    def delta(self):
+        return np.floor(self.w * Q_DELTA + 0.5) - Q_DELTA * self.onehot
+
+    @cached_property
+    def gpred(self):
+        return self.delta @ self.rk                     # exact: <= ~2.5e15
+
+    # --- MLP vjp, cotangent ones: gh = 1[h>0] * rowsum(Wq)
+    @cached_property
+    def gh(self):
+        qs = self.fold.wq.sum(axis=1).astype(np.int64)
+        return (self.h > 0) * qs[None, :].astype(np.float64)
+
+    # --- chained MLP backward from a cotangent on the fold.cot_scale
+    # grid; int64 throughout (its products pass 2^53)
+    @cached_property
+    def wi(self):
+        return self.fold.wq.astype(np.int64)
+
+    @cached_property
+    def cot(self):
+        return self.fold.cot(self)
+
+    @cached_property
+    def gcs(self):
+        return _requant(self.cot, self.fold.cot_scale, Q_IN)
+
+    @cached_property
+    def ghq(self):
+        gam = _requant(self.gcs @ self.wi.T, 1e12, Q_IN)
+        return np.where(self.h > 0, gam, np.int64(0))
+
+    @cached_property
+    def ghq9(self):
+        """``ghq`` on the fine 1e9 grid (chain_grads' per-row gx leg)."""
+        gs9 = _requant(self.cot, self.fold.cot_scale, 1e9)
+        gam9 = _requant(gs9 @ self.wi.T, 1e15, 1e9)
+        return np.where(self.h > 0, gam9, np.int64(0))
+
+
+def _cot_supplied(t: _Tile) -> np.ndarray:
+    """A merged cotangent handed to a later stage: joined onto the rows
+    as ``nums`` (blocked), or broadcast as the right side and looked up
+    by row id."""
+    if "nums" in t.extra:
+        return _vec_mat(t.extra["nums"])
+    return t.rmat[pd.Index(t.rids).get_indexer(t.lids)]
+
+
+def _emit(fold: Fold, legs, t: _Tile) -> pd.DataFrame:
+    frames = []
+    for leg in legs:
+        nums = leg.fn(t).astype(np.int64)
+        ids = {L: t.lids, R: t.rids}.get(leg.side)
+        if ids is None:
+            ids = np.arange(len(nums), dtype=np.int64)
+        frames.append(pd.DataFrame({"which": leg.name, "i": ids, "nums": list(nums)}))
+    out = pd.concat(frames, ignore_index=True)
+    if fold.row_max:
+        out["mx"] = t.mx
+    return out
+
+
+def _kernel(fold: Fold, legs):
+    return lambda *tile: _emit(fold, legs, _Tile(fold, *tile))
+
+
+def _broadcast(right: DataFrame, broadcast: bool | str) -> bool:
+    """The path choice: ``"auto"`` broadcasts a right side of at most
+    :data:`BROADCAST_MAX_ROWS` rows (footer row count, no job)."""
+    if broadcast == "auto":
+        return rows_for_choice(right) <= BROADCAST_MAX_ROWS
+    return bool(broadcast)
+
+
+def _row_stats(fold: Fold, left: DataFrame, right: DataFrame, block: int):
+    """Blocked path, before the leg sweep: the row max (sweep 1) and the
+    softmax sums the legs need (sweep 2), complete per row and joined
+    onto the left rows.  Max and integer sums are order-independent."""
+
+    def sweep(lf, extra, schema, cols):
+        def kernel(*tile):
+            t = _Tile(fold, *tile)
+            return pd.DataFrame({"i": t.lids, **{c: f(t) for c, f in cols.items()}})
+
+        return blocked_partials(lf, right, kernel, schema, left_block=block,
+                                right_block=block, left_extra=extra)
+
+    mx = sweep(left.select("i", "vec"), (), "i long, mx double",
+               {"mx": lambda t: t.mx})
+    left = left.join(mx.groupBy("i").agg(F.max("mx").alias("mx")), "i")
+    if fold.needs:
+        partial = {"st": lambda t: t.e.sum(axis=1).astype(np.int64),
+                   "rn": lambda t: t.rnum}
+        sums = sweep(left, ("mx",), "i long, " + ", ".join(
+            f"{c} long" for c in fold.needs), {c: partial[c] for c in fold.needs})
+        left = left.join(
+            sums.groupBy("i").agg(*[F.sum(c).alias(c) for c in fold.needs]), "i"
+        )
+    return left
+
+
+def _merge(parts: DataFrame, row_max: bool = False) -> DataFrame:
+    """``binary_reduce``: exact scatter-add of the int64 partials per
+    ``(which, i)`` — order-independent."""
+    mx = [F.max("mx").alias("mx")] if row_max else []
+    g = parts.groupBy("which", "i").agg(F.collect_list("nums").alias("ps"), *mx)
     zero = F.transform(F.element_at(F.col("ps"), 1), lambda _: F.lit(0).cast("long"))
     merged = F.aggregate(
         F.col("ps"), zero,
         lambda acc, p: F.zip_with(acc, p, lambda a, b: a + b),
     )
-    return g.select(*keys, merged.alias("nums"))
+    return g.select("which", "i", merged.alias("nums"), *(["mx"] if row_max else []))
+
+
+def tile_fold(
+    fold: Fold,
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    values: DataFrame | None = None,
+    broadcast: bool | str = "auto",
+    block: int = 4096,
+    spread: bool = True,
+    plus: DataFrame | None = None,
+) -> DataFrame:
+    """Fold ``fold``'s legs over every (left, right) tile -> the merged
+    int64 partials ``(which, i, nums[, mx])``, each key complete.
+
+    ``left`` is ``(i, vec, *cols)``; its extra columns reach the legs
+    (``label``, a joined cotangent).  ``right`` is ``(i, vec)``, or
+    ``None`` for a row fold; ``values`` (row-aligned with ``right`` on
+    ``i``) packs a distinct value matrix after the keys.  ``broadcast``
+    picks the chunker (``"auto"``: by the right side's footer row
+    count); the blocked path runs the :func:`_row_stats` sweeps, then
+    the legs per ``block`` x ``block`` tile, with row-local legs folded
+    once per row.  ``spread`` fans the left rows out before a
+    broadcast-path kernel.  ``plus`` is already-folded partials merged
+    in with this fold's."""
+    extra = tuple(c for c in left.columns if c not in ("i", "vec"))
+    schema = PARTS + (", mx double" if fold.row_max else "")
+    if right is not None:
+        right = right.select("i", "vec")
+    tiled = right is not None and not _broadcast(right, broadcast)
+    if values is not None:
+        fold = replace(fold, k_dim=list_dim(right, "vec"))
+        right = right.join(
+            values.select("i", F.col("vec").alias("_vv")), "i"
+        ).select("i", F.concat("vec", "_vv").alias("vec"))
+    if tiled:
+        parts = blocked_partials(
+            _row_stats(fold, left, right, block), right,
+            _kernel(fold, [leg for leg in fold.legs if leg.tile]), schema,
+            left_block=block, right_block=block,
+            left_extra=("mx", *fold.needs, *extra),
+        )
+        row_legs = [leg for leg in fold.legs if not leg.tile]
+        if row_legs:
+            parts = parts.unionByName(broadcast_right_partials(
+                left, None, _kernel(fold, row_legs), schema,
+                left_extra=extra, spread_left=spread,
+            ))
+    else:
+        parts = broadcast_right_partials(
+            left, right, _kernel(fold, fold.legs), schema,
+            left_extra=extra, spread_left=spread,
+        )
+        if plus is None and all(leg.side == L for leg in fold.legs):
+            return parts   # one partial per (which, i): already complete
+    if plus is not None:
+        parts = parts.unionByName(plus)
+    return _merge(parts, fold.row_max)
+
+
+def _finish(parts: DataFrame, legs, keys=("which", "i"), pos="d") -> DataFrame:
+    """The one finalizer: each leg's merged int64 numerators exploded to
+    ``(*keys, pos, val)``, rounded half away from zero on the leg's grid
+    in exact long arithmetic, ``val = micro / 1e6``.  A :data:`RATIO`
+    leg divides by its own first element (the softmax sum S):
+    ``round(num / S) = (2|num| + S) div 2S``.  One SQL projection."""
+    by_grid: dict[int, list[str]] = {}
+    for leg in legs:
+        by_grid.setdefault(leg.grid, []).append(leg.name)
+
+    def case(of: dict) -> str:
+        *rest, (_, last) = of.items()
+        arms = " ".join(
+            "WHEN which IN ({}) THEN {}".format(
+                ", ".join(f"'{n}'" for n in by_grid[g]), v)
+            for g, v in rest
+        )
+        return f"CASE {arms} ELSE {last} END" if rest else last
+
+    mag = case({g: "(2 * abs(x) + element_at(nums, 1)) div (2 * element_at(nums, 1))"
+                if g == RATIO else f"(abs(x) + {g // 2}L) div {g}L"
+                for g in by_grid})
+    arr = case({g: "slice(nums, 2, 2000000000)" if g == RATIO else "nums"
+                for g in by_grid})
+    val = f"CAST(CASE WHEN x < 0 THEN -({mag}) ELSE {mag} END AS DOUBLE) / {Q_IN}D"
+    return parts.select(*keys, F.expr(
+        f"inline(transform({arr}, (x, k) -> "
+        f"named_struct('{pos}', CAST(k AS BIGINT), 'val', {val})))"
+    ))
+
+
+def _num(k: int):
+    """Element ``k`` (1-based) of the merged ``nums`` as a double."""
+    return F.element_at("nums", k).cast("double")
+
+
+# ------------------------------------------------------------- the legs
+
+def _ratio(t: _Tile, v: np.ndarray) -> np.ndarray:
+    """``[S, e @ v]``: the softmax-weighted values over their sum."""
+    return np.concatenate([t.e.sum(axis=1)[:, None], t.e @ v], axis=1)
+
+
+ATT_OUT = Leg("out", L, RATIO, lambda t: _ratio(t, t.rv))
+
+# gq/gk numerators on the 1e10 grid (Q_GS * Q_IN), gv on 1e9 (Q_W)
+ATT_VJP = (
+    Leg("gq", L, 10_000, lambda t: t.gs @ t.rk, ("st", "rn")),
+    Leg("gk", R, 10_000, lambda t: t.gs.T @ t.lq, ("st", "rn")),
+    Leg("gv", R, 1_000, lambda t: _cols(
+        np.floor(t.w * Q_W + 0.5).sum(axis=0), t.rk.shape[1]), ("st", "rn")),
+)
+
+# delta = floor(w*1e6 + .5) - 1e6*onehot: 1e12-scaled numerators
+XE_VJP = (
+    Leg("gpred", L, 1_000_000, lambda t: t.gpred, ("st",)),
+    Leg("gtrg", R, 1_000_000, lambda t: t.delta.T @ t.lq, ("st",)),
+)
+
+# gx/gp numerators 1e12-scaled; gq is a bare 1e6-scaled integer sum
+MLP_VJP = (
+    Leg("gx", L, 1_000_000, lambda t: t.gh @ t.fold.wq.T, tile=False),
+    Leg("gp", W, 1_000_000, lambda t: t.xq.astype(np.int64).T
+        @ t.gh.astype(np.int64), tile=False),
+    Leg("gq", W, 1, lambda t: _cols(t.hs.sum(axis=0), t.fold.wq.shape[1]),
+        tile=False),
+)
+
+
+def _chain_vjp(fine: bool) -> tuple[Leg, ...]:
+    """The MLP backward pushed from a cotangent: ``gx`` per row (on the
+    fine 1e9 grid when ``fine``), ``gp = X^T ghq`` and ``gq = hs^T gs``
+    accumulated on the 1e6 grid."""
+    gx = (Leg("gx", L, 1_000_000_000, lambda t: t.ghq9 @ t.wi.T, tile=False)
+          if fine else
+          Leg("gx", L, 1_000_000, lambda t: t.ghq @ t.wi.T, tile=False))
+    return (
+        gx,
+        Leg("gp", W, 1_000_000, lambda t: t.xq.astype(np.int64).T @ t.ghq,
+            tile=False),
+        Leg("gq", W, 1_000_000, lambda t: t.hs.astype(np.int64).T @ t.gcs,
+            tile=False),
+    )
 
 
 # ------------------------------------------------------------- attention
@@ -228,133 +611,29 @@ def attention_gate(
     is order-independent), then a tile sweep emitting int64 partials
     ``[S_tile, num_tile...]`` merged by ``sum(long)``.
     """
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(kv_vec) <= BROADCAST_MAX_ROWS
-
-    if broadcast_kv:
-        if v_vec is None:
-            rids, rq = _collect_kv(kv_vec)
-            vq = rq
-        else:
-            pdf_kv = (
-                kv_vec.select("i", "vec")
-                .join(v_vec.select("i", F.col("vec").alias("vvec")), "i")
-                .toPandas()
-            )
-            rids = pdf_kv["i"].to_numpy(dtype=np.int64)
-            rq = _quant(_vec_mat(pdf_kv["vec"]))
-            vq = _quant(_vec_mat(pdf_kv["vvec"]))
-        denom = 1e12 * np.sqrt(rq.shape[1]) if scale else 1e12
-        spark = q_vec.sparkSession
-        b = spark.sparkContext.broadcast((rids, rq, vq))
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _rids, rmat, vmat = b.value
-            d = vmat.shape[1]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lq = _quant(_vec_mat(pdf["vec"]))
-                _s, _mx, e, S = _softmax_den_num(lq, rmat, denom)
-                num = e @ vmat                      # exact: ints < 2^53
-                # val = num / (S * 1e6) rounded 6 == round(num/S) / 1e6
-                micro = _micro_ratio_np(num, np.broadcast_to(S[:, None], num.shape))
-                n = len(pdf)
-                yield pd.DataFrame({
-                    "i": np.repeat(pdf["i"].to_numpy(), d),
-                    "d": np.tile(np.arange(d, dtype=np.int64), n),
-                    "val": (micro / Q_IN).ravel(),
-                })
-
-        out = _spread(q_vec.select("i", "vec")).mapInPandas(
-            run, "i long, d long, val double"
-        )
-        return out
-
-    # ---- blocked path: two exact tile sweeps -------------------------
-    dim = list_dim(q_vec, "vec")
-    denom = 1e12 * np.sqrt(dim) if scale else 1e12
-    if v_vec is None:
-        k_dim = None
-        right = kv_vec.select("i", "vec")
-    else:
-        k_dim = list_dim(kv_vec, "vec")
-        right = (
-            kv_vec.select("i", "vec")
-            .join(v_vec.select("i", F.col("vec").alias("_vv")), "i")
-            .select("i", F.concat("vec", "_vv").alias("vec"))
-        )
-
-    def mx_kernel(lids, lmat, _extra, rids, rmat):
-        rk = rmat if k_dim is None else rmat[:, :k_dim]
-        s = (_quant(lmat) @ _quant(rk).T) / denom
-        return pd.DataFrame({"i": lids, "mx": s.max(axis=1)})
-
-    mxp = blocked_partials(
-        q_vec.select("i", "vec"), right, mx_kernel,
-        "i long, mx double", left_block=block, right_block=block,
+    parts = tile_fold(
+        Fold((ATT_OUT,), scale=scale), q_vec.select("i", "vec"), kv_vec,
+        values=v_vec, broadcast=broadcast_kv, block=block,
     )
-    mx = mxp.groupBy("i").agg(F.max("mx").alias("mx"))
-    q_aug = q_vec.select("i", "vec").join(mx, "i")
-
-    def part_kernel(lids, lmat, extra, rids, rmat):
-        rk = _quant(rmat if k_dim is None else rmat[:, :k_dim])
-        rv = rk if k_dim is None else _quant(rmat[:, k_dim:])
-        s = (_quant(lmat) @ rk.T) / denom
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = e.sum(axis=1)
-        num = e @ rv                                # exact per tile
-        nums = np.concatenate([S[:, None], num], axis=1).astype(np.int64)
-        return pd.DataFrame({"i": lids, "nums": list(nums)})
-
-    parts = blocked_partials(
-        q_aug, right, part_kernel,
-        "i long, nums array<long>",
-        left_block=block, right_block=block, left_extra=("mx",),
-    )
-    merged = _merge_long_arrays(parts, ["i"])
-    out = merged.select(
-        "i",
-        F.posexplode(F.slice("nums", 2, 2_000_000_000)).alias("d", "num"),
-        F.element_at("nums", 1).alias("sden"),
-    )
-    # round(num/S) half away from zero, exact long arithmetic
-    mag = F.expr("(2 * abs(num) + sden) div (2 * sden)")
-    micro = F.when(F.col("num") < 0, -mag).otherwise(mag)
-    return out.select(
-        "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+    return _finish(parts, (ATT_OUT,), keys=("i",))
 
 
-def _grads_finalize(parts: DataFrame) -> DataFrame:
-    """Shared merge + integer-rounding finalizer for the gradient legs
-    (gq/gk at 1e10 scale, gv at 1e9)."""
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select(
-        "which", "i", F.posexplode("nums").alias("d", "num")
-    )
-    micro = F.when(
-        F.col("which") == "gv", _micro_col("num", 1_000)
-    ).otherwise(_micro_col("num", 10_000))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _blocked_mx(vec_q: DataFrame, kv: DataFrame, denom: float, block: int) -> DataFrame:
-    """Tile sweep 1: exact per-row score max (max is order-independent)."""
-
-    def mx_kernel(lids, lmat, _extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / denom
-        return pd.DataFrame({"i": lids, "mx": s.max(axis=1)})
-
-    mxp = blocked_partials(
-        vec_q.select("i", "vec"), kv.select("i", "vec"), mx_kernel,
-        "i long, mx double", left_block=block, right_block=block,
-    )
-    return mxp.groupBy("i").agg(F.max("mx").alias("mx"))
+def attention_gate_plain_kv(
+    q_vec: DataFrame,
+    kv_vec: DataFrame,
+    v_vec: DataFrame,
+    *,
+    broadcast_kv: bool | str = "auto",
+) -> DataFrame:
+    """Plain (K == V) and independent-V attention from ONE pass ->
+    ``(which, i, d, val)``, ``which`` in {plain, kv}: the two legs share
+    the exact score/softmax chain (e, S) and differ only in the value
+    matrix of the final integer matmul."""
+    legs = (Leg("plain", L, RATIO, lambda t: _ratio(t, t.rk)),
+            ATT_OUT._replace(name="kv"))
+    parts = tile_fold(Fold(legs), q_vec.select("i", "vec"), kv_vec,
+                      values=v_vec, broadcast=broadcast_kv)
+    return _finish(parts, legs)
 
 
 def attention_grads_gate(
@@ -369,156 +648,32 @@ def attention_grads_gate(
     exact-integer, so both physical paths and the oracle agree bit-wise:
 
     - broadcast path (KV fits executors): one narrow kernel pass; gq is
-      a per-row dgemm, gk/gv are per-partition int64 partials
-      scatter-added by ``sum(long)`` (the reference ``g.add_`` monoid,
-      core.py:56-57).
+      a per-row dgemm, gk/gv are int64 partials scatter-added by
+      ``sum(long)`` (the reference ``g.add_`` monoid, core.py:56-57).
     - blocked path (large KV): three tile sweeps — row max, then exact
       long-summed (S, rnum) stats, then per-tile gradient partials into
       the same scatter-add.  Tile order cannot change a single bit.
     """
-    return _grads_finalize(
-        _attention_grads_parts(vec, block=block, broadcast_kv=broadcast_kv)
-    )
-
-
-def _attention_grads_parts(
-    vec: DataFrame, *, block: int = 4096, broadcast_kv: bool | str = "auto",
-    spread: bool = True,
-) -> DataFrame:
-    """Unmerged integer-numerator partials of the self-attention vjp ->
-    ``(which, i, nums)`` with gq/gk numerators on the 1e10 grid
-    (``Q_GS * Q_IN``) and gv on the 1e9 grid (``Q_W``).  Shared by
-    :func:`attention_grads_gate` (which merges + rounds) and
-    :func:`chain2_grads_gate` (which feeds the merged numerators into
-    the MLP backward — the composition must see pre-rounding ints)."""
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_kv:
-        return _attention_grads_parts_blocked(vec, block=block)
-    rids, rq = _collect_kv(vec)
-    vsq = rq.sum(axis=1)                            # int-valued, exact
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, vsq))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, vs = b.value
-        n, d = rmat.shape
-        gk_acc = np.zeros((n, d), dtype=np.int64)
-        gv_acc = np.zeros(n, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            rnum = e.astype(np.int64) @ vs.astype(np.int64)  # exact int64
-            w = e / S[:, None]
-            t = vs[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-            gs = np.floor(w * t * Q_GS + 0.5)        # int-valued float64
-            wq = np.floor(w * Q_W + 0.5)
-            gq_num = gs @ rmat                       # exact: <= ~9e14
-            gk_acc += (gs.T @ lq).astype(np.int64)   # exact per batch
-            gv_acc += wq.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "gq",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gq_num.astype(np.int64)),
-            })
-        yield pd.DataFrame({
-            "which": "gk", "i": _rids, "nums": list(gk_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gv", "i": _rids,
-            "nums": list(np.repeat(gv_acc[:, None], d, axis=1)),
-        })
-
-    src = vec.select("i", "vec")
-    if spread:  # callers passing an already-spread derived frame skip it
-        src = _spread(src)
-    return src.mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-
-
-def _attention_grads_parts_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-KV tile path of :func:`_attention_grads_parts` —
-    bit-identical to the broadcast path (exact integer merges at every
-    stage)."""
-    q = vec.select("i", "vec")
-    mx = _blocked_mx(q, q, 1e12, block)
-    q_mx = q.join(mx, "i")
-
-    # sweep 2: exact (S, rnum) per row — long sums of tile partials
-    def sr_kernel(lids, lmat, extra, rids, rmat):
-        rq = _quant(rmat)
-        s = (_quant(lmat) @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        vsq = rq.sum(axis=1)
-        return pd.DataFrame({
-            "i": lids,
-            "sp": e.sum(axis=1).astype(np.int64),
-            "rp": e.astype(np.int64) @ vsq.astype(np.int64),
-        })
-
-    srp = blocked_partials(
-        q_mx, q, sr_kernel, "i long, sp long, rp long",
-        left_block=block, right_block=block, left_extra=("mx",),
-    )
-    sr = srp.groupBy("i").agg(
-        F.sum("sp").alias("st"), F.sum("rp").alias("rn")
-    )
-    q_aug = q_mx.join(sr, "i")
-
-    # sweep 3: per-tile gradient partials into the exact scatter-add
-    def leg_kernel(lids, lmat, extra, rids, rmat):
-        lq = _quant(lmat)
-        rq = _quant(rmat)
-        s = (lq @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = extra["st"].to_numpy().astype(np.float64)
-        rnum = extra["rn"].to_numpy(dtype=np.int64)
-        vsq = rq.sum(axis=1)
-        w = e / S[:, None]
-        t = vsq[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-        gs = np.floor(w * t * Q_GS + 0.5)
-        wq = np.floor(w * Q_W + 0.5)
-        gq_p = gs @ rq                   # exact per tile: <= ~1.9e15
-        gk_p = gs.T @ lq
-        gv_p = wq.sum(axis=0)
-        d = rq.shape[1]
-        return pd.concat(
-            [
-                pd.DataFrame({"which": "gq", "i": lids,
-                              "nums": list(gq_p.astype(np.int64))}),
-                pd.DataFrame({"which": "gk", "i": rids,
-                              "nums": list(gk_p.astype(np.int64))}),
-                pd.DataFrame({"which": "gv", "i": rids,
-                              "nums": list(np.repeat(
-                                  gv_p.astype(np.int64)[:, None], d, axis=1))}),
-            ],
-            ignore_index=True,
-        )
-
-    return blocked_partials(
-        q_aug, q, leg_kernel, "which string, i long, nums array<long>",
-        left_block=block, right_block=block, left_extra=("mx", "st", "rn"),
-    )
+    v = vec.select("i", "vec")
+    parts = tile_fold(Fold(ATT_VJP), v, v, broadcast=broadcast_kv, block=block)
+    return _finish(parts, ATT_VJP)
 
 
 def attention_batched_gate(bvec: DataFrame, *, scale: bool = True) -> DataFrame:
     """Quantized batched self-attention (reference custom_attention.cpp:
     7-38): attention within each batch id, one cogroup on ``b``."""
+    fold = Fold(scale=scale)
 
     def per_batch(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
             return pd.DataFrame({"b": [], "i": [], "d": [], "val": []}).astype(
                 {"b": "int64", "i": "int64", "d": "int64", "val": "float64"}
             )
-        lq = _quant(_vec_mat(left["vec"]))
-        rq = _quant(_vec_mat(right["kv_vec"]))
-        denom = 1e12 * np.sqrt(lq.shape[1]) if scale else 1e12
-        _s, _mx, e, S = _softmax_den_num(lq, rq, denom)
-        num = e @ rq
-        micro = _micro_ratio_np(num, np.broadcast_to(S[:, None], num.shape))
+        t = _Tile(fold, left["i"].to_numpy(), _vec_mat(left["vec"]),
+                  left[[]], right["kv_i"].to_numpy(), _vec_mat(right["kv_vec"]))
+        num = (t.e @ t.rv).astype(np.int64)
+        den = t.S.astype(np.int64)[:, None]
+        micro = np.sign(num) * ((2 * np.abs(num) + den) // (2 * den))
         val = micro / Q_IN
         n, d = val.shape
         return pd.DataFrame({
@@ -545,69 +700,15 @@ def xentropy_gate(
     ``(i, loss)``: ``loss = (mx - s_label) + ln(S / 1e6)``, with the
     exact integer score/softmax chain.  The single ``ln`` is the only
     unquantized transcendental: a 1-ulp libm wiggle flips ROUND(,6)
-    with probability ~1e-9 per row.  Large class tables take the
-    blocked tile path (the true-class score merges by sum — exactly one
-    tile contributes a non-zero, so the double sum is exact)."""
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_trg:
-        return _xentropy_gate_blocked(vec, block=block)
-    rids, rq = _collect_kv(vec)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rq, pos))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmat, posmap = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            s, mx, _e, S = _softmax_den_num(lq, rmat, 1e12)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            s_lab = s[np.arange(len(pdf)), cols]
-            loss = mx - s_lab + np.log(S / Q_EXP)
-            yield pd.DataFrame({"i": pdf["i"].to_numpy(), "loss": loss})
-
-    out = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "i long, loss double"
-    )
-    return out.select("i", F.round("loss", 6).alias("loss"))
-
-
-def _xentropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-class-table tile path of :func:`xentropy_gate`."""
-    pred = vec.select("i", "vec", "label")
-    trg = vec.select("i", "vec")
-    mx = _blocked_mx(pred, trg, 1e12, block)
-    p_mx = pred.join(mx, "i")
-
-    def s_kernel(lids, lmat, extra, rids, rmat):
-        lq = _quant(lmat)
-        rq = _quant(rmat)
-        s = (lq @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        lab = extra["label"].to_numpy()
-        slab = (s * (lab[:, None] == rids[None, :])).sum(axis=1)
-        return pd.DataFrame({
-            "i": lids,
-            "sp": e.sum(axis=1).astype(np.int64),
-            "slab": slab,  # 0.0 unless the true class is in this tile
-        })
-
-    parts = blocked_partials(
-        p_mx, trg, s_kernel, "i long, sp long, slab double",
-        left_block=block, right_block=block, left_extra=("mx", "label"),
-    )
-    # sum(slab) is exact: exactly one tile contributes non-zero
-    agg = parts.groupBy("i").agg(
-        F.sum("sp").alias("st"), F.sum("slab").alias("slab")
-    ).join(mx, "i")
-    loss = (
-        F.col("mx") - F.col("slab")
-        + F.log(F.col("st").cast("double") / F.lit(Q_EXP))
-    )
-    return agg.select("i", F.round(loss, 6).alias("loss"))
+    with probability ~1e-9 per row.  The label score rides the merge as
+    its integer dot (exactly one tile holds the true class), so the
+    blocked path stays at two sweeps: row max, then ``[S, dot_label]``."""
+    leg = Leg("xent", L, None, lambda t: np.stack(
+        [t.e.sum(axis=1), (t.dot * t.onehot).sum(axis=1)], axis=1))
+    r = tile_fold(Fold((leg,), row_max=True), vec.select("i", "vec", "label"),
+                  vec, broadcast=broadcast_trg, block=block)
+    loss = F.col("mx") - _num(2) / F.lit(1e12) + F.log(_num(1) / F.lit(Q_EXP))
+    return r.select("i", F.round(loss, 6).alias("loss"))
 
 
 def entropy_gate(
@@ -617,74 +718,14 @@ def entropy_gate(
     ``(i, entropy)``: ``H = (mx + ln(S/1e6)) - tsum/1e9`` with
     ``tsum = sum_k floor(w * s * 1e9 + .5)`` an exact integer sum.
     Large class tables take the blocked tile path (mx sweep, exact S
-    merge, exact tsum merge)."""
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_trg:
-        return _entropy_gate_blocked(vec, block=block)
-    _rids, rq = _collect_kv(vec)
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(rq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmat = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            s, mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w = e / S[:, None]
-            tq = np.floor(w * s * Q_W + 0.5)
-            tsum = tq.sum(axis=1)                    # exact: ints < 2^53
-            h = mx + np.log(S / Q_EXP) - tsum / Q_W
-            yield pd.DataFrame({"i": pdf["i"].to_numpy(), "entropy": h})
-
-    out = _spread(vec.select("i", "vec")).mapInPandas(
-        run, "i long, entropy double"
-    )
-    return out.select("i", F.round("entropy", 6).alias("entropy"))
-
-
-def _entropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-class-table tile path of :func:`entropy_gate`."""
-    q = vec.select("i", "vec")
-    mx = _blocked_mx(q, q, 1e12, block)
-    q_mx = q.join(mx, "i")
-
-    def s_kernel(lids, lmat, extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        return pd.DataFrame({"i": lids, "sp": e.sum(axis=1).astype(np.int64)})
-
-    sp = blocked_partials(
-        q_mx, q, s_kernel, "i long, sp long",
-        left_block=block, right_block=block, left_extra=("mx",),
-    )
-    sden = sp.groupBy("i").agg(F.sum("sp").alias("st"))
-    q_aug = q_mx.join(sden, "i")
-
-    def t_kernel(lids, lmat, extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = extra["st"].to_numpy().astype(np.float64)
-        w = e / S[:, None]
-        tq = np.floor(w * s * Q_W + 0.5)
-        return pd.DataFrame({"i": lids, "tp": tq.sum(axis=1).astype(np.int64)})
-
-    tp = blocked_partials(
-        q_aug, q, t_kernel, "i long, tp long",
-        left_block=block, right_block=block, left_extra=("mx", "st"),
-    )
-    agg = (
-        tp.groupBy("i").agg(F.sum("tp").alias("tsum"))
-        .join(sden, "i").join(mx, "i")
-    )
-    h = (
-        F.col("mx")
-        + F.log(F.col("st").cast("double") / F.lit(Q_EXP))
-        - F.col("tsum").cast("double") / F.lit(Q_W)
-    )
-    return agg.select("i", F.round(h, 6).alias("entropy"))
+    sweep, then ``[S, tsum]`` partials)."""
+    leg = Leg("ent", L, None, lambda t: np.stack(
+        [t.e.sum(axis=1), np.floor(t.w * t.s * Q_W + 0.5).sum(axis=1)], axis=1),
+        ("st",))
+    r = tile_fold(Fold((leg,), row_max=True), vec.select("i", "vec"), vec,
+                  broadcast=broadcast_trg, block=block)
+    h = F.col("mx") + F.log(_num(1) / F.lit(Q_EXP)) - _num(2) / F.lit(Q_W)
+    return r.select("i", F.round(h, 6).alias("entropy"))
 
 
 def xentropy_grads_gate(
@@ -696,222 +737,26 @@ def xentropy_grads_gate(
     exact integer matmuls scatter-added by ``sum(long)``.  Large class
     tables take the blocked tile path (row-max sweep, exact long-summed
     S, per-tile delta partials) — bit-identical to the broadcast path."""
-    pred = vec.select("i", "vec", "label")
-    trg = vec.select("i", "vec")
-    parts = _xe_grads_parts(
-        pred, trg, block=block, broadcast_trg=broadcast_trg
-    )
-    return _xent_grads_finalize(parts)
-
-
-def _xe_grads_parts(
-    pred: DataFrame,
-    trg: DataFrame,
-    *,
-    block: int,
-    broadcast_trg: bool | str = "auto",
-) -> DataFrame:
-    """Un-finalized xentropy-gradient partials for a *general*
-    (pred, trg) pair -> ``(which, i, nums array<long>)`` rows with
-    which in {gpred, gtrg} and 1e12-scaled integer numerators (NOT yet
-    merged or micro-rounded) — the form a chained upstream backward
-    consumes.  ``pred`` carries ``(i, vec, label)``."""
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(trg) <= BROADCAST_MAX_ROWS
-    if not broadcast_trg:
-        return _xe_grads_parts_blocked(pred, trg, block=block)
-    rids, rq = _collect_kv(trg)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = pred.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, pos))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, posmap = b.value
-        n, d = rmat.shape
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w = e / S[:, None]
-            delta = np.floor(w * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            gpred = delta @ rmat                     # exact: <= ~1.2e15
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "gpred",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gpred.astype(np.int64)),
-            })
-        yield pd.DataFrame({"which": "gtrg", "i": _rids, "nums": list(gtrg_acc)})
-
-    return _spread(pred.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-
-
-def _xent_grads_finalize(parts: DataFrame) -> DataFrame:
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = _micro_col("num", 1_000_000)             # 1e12-scaled numerators
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _xentropy_grads_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-class-table tile path of :func:`xentropy_grads_gate` —
-    bit-identical to the broadcast path (exact integer merges)."""
-    pred = vec.select("i", "vec", "label")
-    trg = vec.select("i", "vec")
-    parts = _xe_grads_parts_blocked(pred, trg, block=block)
-    return _xent_grads_finalize(parts)
-
-
-def _xe_grads_parts_blocked(
-    pred: DataFrame, trg: DataFrame, *, block: int
-) -> DataFrame:
-    """Tile-path twin of the broadcast branch of :func:`_xe_grads_parts`
-    for a general (pred, trg) pair — un-finalized integer partials."""
-    mx = _blocked_mx(pred, trg, 1e12, block)
-    p_mx = pred.join(mx, "i")
-
-    def s_kernel(lids, lmat, extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        return pd.DataFrame({"i": lids, "sp": e.sum(axis=1).astype(np.int64)})
-
-    sp = blocked_partials(
-        p_mx, trg, s_kernel, "i long, sp long",
-        left_block=block, right_block=block, left_extra=("mx",),
-    )
-    sden = sp.groupBy("i").agg(F.sum("sp").alias("st"))
-    p_aug = p_mx.join(sden, "i")
-
-    def leg_kernel(lids, lmat, extra, rids, rmat):
-        lq = _quant(lmat)
-        rq = _quant(rmat)
-        s = (lq @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = extra["st"].to_numpy().astype(np.float64)
-        w = e / S[:, None]
-        delta = np.floor(w * Q_DELTA + 0.5)
-        # one-hot only when the true class id lives in this tile
-        # (reference xentropy.py:12 tile-local one-hot)
-        lab = extra["label"].to_numpy()
-        delta -= Q_DELTA * (lab[:, None] == rids[None, :])
-        gpred_p = delta @ rq                 # exact per tile: <= ~2.5e15
-        gtrg_p = delta.T @ lq
-        return pd.concat(
-            [
-                pd.DataFrame({"which": "gpred", "i": lids,
-                              "nums": list(gpred_p.astype(np.int64))}),
-                pd.DataFrame({"which": "gtrg", "i": rids,
-                              "nums": list(gtrg_p.astype(np.int64))}),
-            ],
-            ignore_index=True,
-        )
-
-    return blocked_partials(
-        p_aug, trg, leg_kernel, "which string, i long, nums array<long>",
-        left_block=block, right_block=block, left_extra=("mx", "st", "label"),
-    )
+    parts = tile_fold(Fold(XE_VJP), vec.select("i", "vec", "label"), vec,
+                      broadcast=broadcast_trg, block=block)
+    return _finish(parts, XE_VJP)
 
 
 def attention_xe_grads_gate_fused(
     vec: DataFrame, *, broadcast_kv: bool | str = "auto"
 ) -> DataFrame:
-    """Attention grads + xentropy grads from ONE broadcast pass ->
+    """Attention grads + xentropy grads from ONE fold ->
     ``(which, i, d, val)``, ``which`` in {att_gq, att_gk, att_gv,
     xe_gpred, xe_gtrg}: both operators recompute the SAME unscaled
     score/softmax chain (s, mx, e, S) and differ only in the jacobian
-    they push through it — the fused kernel derives all five legs from
-    one chain, saving a full chain recomputation vs separate calls.
-    Values are bit-identical to :func:`attention_grads_gate` /
+    they push through it, so one chain feeds all five legs on either
+    path.  Values are bit-identical to :func:`attention_grads_gate` /
     :func:`xentropy_grads_gate` (same math, same integer grids — pinned
-    by test); large inputs fall back to the per-op blocked tile paths.
-    """
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-
-    def tag(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.concat(F.lit(prefix), F.col("which")).alias("which"),
-            "i", "d", "val",
-        )
-
-    if not broadcast_kv:
-        a = tag(
-            _grads_finalize(_attention_grads_parts_blocked(vec, block=4096)),
-            "att_",
-        )
-        x = tag(_xentropy_grads_gate_blocked(vec, block=4096), "xe_")
-        return a.unionByName(x)
-
-    rids, rq = _collect_kv(vec)
-    vsq = rq.sum(axis=1)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, vsq, pos))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, vs, posmap = b.value
-        n, d = rmat.shape
-        gk_acc = np.zeros((n, d), dtype=np.int64)
-        gv_acc = np.zeros(n, dtype=np.int64)
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w = e / S[:, None]
-            # --- attention legs (reference attention.py:11-29) ---
-            rnum = e.astype(np.int64) @ vs.astype(np.int64)
-            t = vs[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-            gs = np.floor(w * t * Q_GS + 0.5)
-            wq = np.floor(w * Q_W + 0.5)
-            gk_acc += (gs.T @ lq).astype(np.int64)
-            gv_acc += wq.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "att_gq",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((gs @ rmat).astype(np.int64)),
-            })
-            # --- xentropy legs (reference xentropy.py:15-37) ---
-            delta = np.floor(w * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "xe_gpred",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((delta @ rmat).astype(np.int64)),
-            })
-        yield pd.DataFrame({"which": "att_gk", "i": _rids, "nums": list(gk_acc)})
-        yield pd.DataFrame({
-            "which": "att_gv", "i": _rids,
-            "nums": list(np.repeat(gv_acc[:, None], d, axis=1)),
-        })
-        yield pd.DataFrame({"which": "xe_gtrg", "i": _rids, "nums": list(gtrg_acc)})
-
-    parts = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = (
-        F.when(F.col("which") == "att_gv", _micro_col("num", 1_000))
-        .when(F.col("which").isin("att_gq", "att_gk"), _micro_col("num", 10_000))
-        .otherwise(_micro_col("num", 1_000_000))  # xe legs: 1e12-scaled
-    )
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+    by test)."""
+    legs = _tag("att_", ATT_VJP) + _tag("xe_", XE_VJP)
+    parts = tile_fold(Fold(legs), vec.select("i", "vec", "label"), vec,
+                      broadcast=broadcast_kv)
+    return _finish(parts, legs)
 
 
 def ml_grads_gate_fused(
@@ -920,278 +765,61 @@ def ml_grads_gate_fused(
     broadcast_kv: bool | str = "auto",
     cache_key: str | None = None,
 ) -> DataFrame:
-    """ALL EIGHT backward legs from ONE broadcast pass -> ``(which, i,
-    d, val)``, which in {att_gq, att_gk, att_gv, xe_gpred, xe_gtrg,
-    mlp_gx, mlp_gp, mlp_gq} — the r6 extension of
-    :func:`attention_xe_grads_gate_fused` that folds the MLP backward
-    into the same kernel: the attention/xentropy legs share the softmax
-    chain, the MLP legs share the already-loaded ``xq`` batch, and all
-    partials ride ONE merge exchange instead of two union branches each
-    scanning the corpus.  Values are bit-identical to the separate
-    kernels (exact int64 accumulators are partition-order-free).
-    Large inputs fall back to the existing blocked unions."""
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_kv:
-        ax = attention_xe_grads_gate_fused(vec, broadcast_kv=False)
-        m = mlp_grads_gate(vec, cache_key=cache_key).select(
-            F.concat(F.lit("mlp_"), F.col("which")).alias("which"),
-            "i", "d", "val",
-        )
-        return ax.unionByName(m)
-
-    wq = _mlp_wq(vec, cache_key=cache_key)
-    qs_int = wq.sum(axis=1).astype(np.int64)
-    rids, rq = _collect_kv(vec)
-    vsq = rq.sum(axis=1)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, vsq, pos, wq, qs_int))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, vs, posmap, w, qs = b.value
-        n, d = rmat.shape
-        gk_acc = np.zeros((n, d), dtype=np.int64)
-        gv_acc = np.zeros(n, dtype=np.int64)
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        gp_acc = np.zeros((d, w.shape[1]), dtype=np.int64)
-        gq_acc = np.zeros(d, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            # --- shared softmax chain (attention + xentropy legs) ---
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w_sm = e / S[:, None]
-            rnum = e.astype(np.int64) @ vs.astype(np.int64)
-            t = vs[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-            gs = np.floor(w_sm * t * Q_GS + 0.5)
-            wqn = np.floor(w_sm * Q_W + 0.5)
-            gk_acc += (gs.T @ lq).astype(np.int64)
-            gv_acc += wqn.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "att_gq",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((gs @ rmat).astype(np.int64)),
-            })
-            delta = np.floor(w_sm * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "xe_gpred",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((delta @ rmat).astype(np.int64)),
-            })
-            # --- MLP legs from the same xq batch (mlp_grads_gate) ---
-            h_int = np.maximum(lq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            gh = (h_int > 0) * qs[None, :].astype(np.float64)
-            gp_acc += lq.astype(np.int64).T @ gh.astype(np.int64)
-            gq_acc += hs.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "mlp_gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((gh @ w.T).astype(np.int64)),
-            })
-        yield pd.DataFrame({"which": "att_gk", "i": _rids, "nums": list(gk_acc)})
-        yield pd.DataFrame({
-            "which": "att_gv", "i": _rids,
-            "nums": list(np.repeat(gv_acc[:, None], d, axis=1)),
-        })
-        yield pd.DataFrame({"which": "xe_gtrg", "i": _rids, "nums": list(gtrg_acc)})
-        yield pd.DataFrame({
-            "which": "mlp_gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "mlp_gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(np.repeat(gq_acc[:, None], w.shape[1], axis=1)),
-        })
-
-    parts = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = (
-        F.when(F.col("which") == "att_gv", _micro_col("num", 1_000))
-        .when(F.col("which").isin("att_gq", "att_gk"), _micro_col("num", 10_000))
-        .when(F.col("which") == "mlp_gq", F.col("num"))
-        .otherwise(_micro_col("num", 1_000_000))  # xe + mlp_gx/gp: 1e12
-    )
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+    """ALL EIGHT backward legs from ONE fold -> ``(which, i, d, val)``,
+    which in {att_gq, att_gk, att_gv, xe_gpred, xe_gtrg, mlp_gx, mlp_gp,
+    mlp_gq} — :func:`attention_xe_grads_gate_fused` plus the MLP
+    backward: the attention/xentropy legs share the softmax chain, the
+    MLP legs share the already-loaded ``xq`` batch, and all partials
+    ride ONE merge exchange.  On the blocked path the MLP legs, which
+    never read the right side, fold once per row beside the tiles.
+    Values are bit-identical to the separate kernels (exact int64
+    partials are partition-order-free)."""
+    legs = (_tag("att_", ATT_VJP) + _tag("xe_", XE_VJP)
+            + _tag("mlp_", MLP_VJP))
+    parts = tile_fold(Fold(legs, wq=_mlp_wq(vec, cache_key=cache_key)),
+                      vec.select("i", "vec", "label"), vec,
+                      broadcast=broadcast_kv)
+    return _finish(parts, legs)
 
 
 # ------------------------------------------------------------ gram / mlp
 
-def gram_gate(vec: DataFrame, *, relu: bool = False) -> DataFrame:
-    """Quantized ``X^T X`` -> ``(j1, j2, val)``; ``relu`` clamps the
-    aggregate at 0 (reference relu_matmul.cpp:9-21).  Map-side exact
-    int64 D x D partials, ``sum(long)`` merge — O(D^2) shuffle."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            g = (xq.T @ xq).astype(np.int64)         # exact: <= N * 3.6e11
-            acc = g if acc is None else acc + g
-        if acc is not None:
-            yield pd.DataFrame({
-                "j1": np.arange(acc.shape[0], dtype=np.int64),
-                "nums": list(acc),
-            })
-
-    # no _spread: the per-batch gram fold is one D x D matmul (~ms);
-    # the exchange costs more than the kernel (measured r18)
-    parts = vec.select("vec").mapInPandas(
-        partial, "j1 long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["j1"])
-    out = merged.select("j1", F.posexplode("nums").alias("j2", "num"))
-    if relu:
-        out = out.withColumn("num", F.greatest("num", F.lit(0).cast("long")))
-    micro = _micro_col("num", 1_000_000)             # 1e12-scaled numerators
-    return out.select(
-        "j1", F.col("j2").cast("long").alias("j2"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+GRAM = Leg("gram", W, 1_000_000, lambda t: t.xq.T @ t.xq)   # <= N * 3.6e11
 
 
 def gram_gate_both(vec: DataFrame) -> DataFrame:
-    """Both gram legs from ONE pass -> ``(which, j1, j2, val)``,
-    ``which`` in {gram, relu}: the exact int64 D x D partials are
-    computed and merged once (the legs differ only in the final
-    GREATEST clamp), halving scan + reduction work vs two
-    :func:`gram_gate` calls."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            g = (xq.T @ xq).astype(np.int64)
-            acc = g if acc is None else acc + g
-        if acc is not None:
-            yield pd.DataFrame({
-                "j1": np.arange(acc.shape[0], dtype=np.int64),
-                "nums": list(acc),
-            })
-
+    """Quantized ``X^T X`` and its relu clamp (reference
+    relu_matmul.cpp:9-21) -> ``(which, j1, j2, val)``, ``which`` in
+    {gram, relu}: the exact int64 D x D partials are computed and
+    merged once; the legs differ only in the final GREATEST clamp."""
     from gemmsql.caching import scoped_cache
 
-    # no _spread: the per-batch gram fold is one D x D matmul (~ms);
-    # the exchange costs more than the kernel (measured r18)
-    parts = vec.select("vec").mapInPandas(
-        partial, "j1 long, nums array<long>"
+    # no spread: the per-batch gram fold is one D x D matmul (~ms); the
+    # exchange costs more than the kernel (measured r18).  D rows of
+    # D-long arrays — tiny; query-scoped so it ages out
+    merged = scoped_cache(
+        tile_fold(Fold((GRAM,)), vec.select("i", "vec"), spread=False),
+        fresh_scope=True,
     )
-    # D rows of D-long arrays — tiny; query-scoped so it ages out
-    merged = scoped_cache(_merge_long_arrays(parts, ["j1"]), fresh_scope=True)
-    out = merged.select("j1", F.posexplode("nums").alias("j2", "num"))
-    plain = out.select(
-        F.lit("gram").alias("which"), "j1",
-        F.col("j2").cast("long").alias("j2"),
-        (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
+    relu = merged.select(
+        F.lit("relu").alias("which"), "i",
+        F.transform("nums", lambda x: F.greatest(x, F.lit(0).cast("long")))
+        .alias("nums"),
     )
-    relu_out = out.withColumn("num", F.greatest("num", F.lit(0).cast("long")))
-    relu = relu_out.select(
-        F.lit("relu").alias("which"), "j1",
-        F.col("j2").cast("long").alias("j2"),
-        (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-    return plain.unionByName(relu)
-
-
-def attention_gate_plain_kv(
-    q_vec: DataFrame,
-    kv_vec: DataFrame,
-    v_vec: DataFrame,
-    *,
-    broadcast_kv: bool | str = "auto",
-) -> DataFrame:
-    """Plain (K == V) and independent-V attention from ONE broadcast
-    pass -> ``(which, i, d, val)``, ``which`` in {plain, kv}: the two
-    legs share the exact score/softmax chain (e, S) and differ only in
-    the value matrix of the final integer matmul.  Falls back to two
-    :func:`attention_gate` calls when KV exceeds the broadcast budget
-    (the blocked path re-derives the chain per tile anyway)."""
-    spark = q_vec.sparkSession
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(kv_vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_kv:
-        plain = attention_gate(q_vec, kv_vec, broadcast_kv=False).select(
-            F.lit("plain").alias("which"), "i", "d", "val"
-        )
-        kv = attention_gate(
-            q_vec, kv_vec, v_vec=v_vec, broadcast_kv=False
-        ).select(F.lit("kv").alias("which"), "i", "d", "val")
-        return plain.unionByName(kv)
-
-    pdf_kv = (
-        kv_vec.select("i", "vec")
-        .join(v_vec.select("i", F.col("vec").alias("vvec")), "i")
-        .toPandas()
-    )
-    rq = _quant(_vec_mat(pdf_kv["vec"]))
-    vq = _quant(_vec_mat(pdf_kv["vvec"]))
-    b = spark.sparkContext.broadcast((rq, vq))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmat, vmat = b.value
-        d = rmat.shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(_vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            den = np.broadcast_to(S[:, None], (len(pdf), d))
-            n = len(pdf)
-            ii = np.repeat(pdf["i"].to_numpy(), d)
-            dd = np.tile(np.arange(d, dtype=np.int64), n)
-            for which, vm in (("plain", rmat), ("kv", vmat)):
-                micro = _micro_ratio_np(e @ vm, den)
-                yield pd.DataFrame({
-                    "which": which, "i": ii, "d": dd,
-                    "val": (micro / Q_IN).ravel(),
-                })
-
-    return _spread(q_vec.select("i", "vec")).mapInPandas(
-        run, "which string, i long, d long, val double"
-    )
+    return _finish(merged.unionByName(relu), (GRAM, GRAM._replace(name="relu")),
+                   keys=("which", F.col("i").alias("j1")), pos="j2")
 
 
 def mlp_weights_int(vec: DataFrame) -> tuple[np.ndarray, int]:
     """Exact integer gram ``G_int = sum_i vq vq^T`` and row count, the
     deterministic weight seed ``W = G / (1e12 * N)`` (driver tables
     carry no weights; reference mlp.py:84-86 uses random ones)."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            g = (xq.T @ xq).astype(np.int64)
-            yield pd.DataFrame({
-                "j1": np.arange(g.shape[0], dtype=np.int64),
-                "nums": list(g),
-                "n": len(pdf),
-            })
-
-    parts = vec.select("vec").mapInPandas(
-        partial, "j1 long, nums array<long>, n long"
-    ).toPandas()
-    n = int(parts.groupby("j1")["n"].sum().iloc[0])
-    d = int(parts["j1"].max()) + 1
-    g = np.zeros((d, d), dtype=np.int64)
-    for j1, nums in zip(parts["j1"], parts["nums"]):
-        g[int(j1)] += np.asarray(nums, dtype=np.int64)
-    return g, n
+    rows = Leg("rows", W, None, lambda t: np.array([[len(t.lids)]]))
+    pdf = tile_fold(Fold((GRAM, rows)), vec.select("i", "vec"),
+                    spread=False).toPandas()
+    n = int(pdf.loc[pdf["which"] == "rows", "nums"].iloc[0][0])
+    g = pdf[pdf["which"] == "gram"].sort_values("i")
+    return np.stack(g["nums"].to_numpy()).astype(np.int64), n
 
 
 # session cache for the deterministic weight seed: W is a pure function
@@ -1219,32 +847,11 @@ def mlp_gate(vec: DataFrame, *, cache_key: str | None = None) -> DataFrame:
     ``h_int = relu(xq @ Wq)``; re-quantized ``hs = floor(h/1e12 * 1e6
     + .5)``; exact ``y_int = hs @ Wq``; ``val = y_int / 1e12``.  One
     narrow map — zero shuffle (the 100 TB shape for applying weights)."""
-    wq = _mlp_wq(vec, cache_key=cache_key)
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        k = w.shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)          # exact: <= 1.4e13
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs @ w                           # exact: <= ~3.2e14
-            micro = _micro_np(y_int, 1_000_000)      # 1e12-scaled
-            n = len(pdf)
-            yield pd.DataFrame({
-                "i": np.repeat(pdf["i"].to_numpy(), k),
-                "k": np.tile(np.arange(k, dtype=np.int64), n),
-                "val": (micro / Q_IN).ravel(),
-            })
-
-    # no _spread: the forward is two D x D matmuls per batch (~ms)
-    return vec.select("i", "vec").mapInPandas(
-        run, "i long, k long, val double"
-    )
+    leg = Leg("y", L, 1_000_000, lambda t: t.y, tile=False)
+    # no spread: the forward is two D x D matmuls per batch (~ms)
+    parts = tile_fold(Fold((leg,), wq=_mlp_wq(vec, cache_key=cache_key)),
+                      vec.select("i", "vec"), spread=False)
+    return _finish(parts, (leg,), keys=("i",), pos="k")
 
 
 def mlp_grads_gate(
@@ -1253,85 +860,13 @@ def mlp_grads_gate(
     """Quantized MLP gradients (reference mlp.py:9-16, cotangent ones,
     P = Q = W) -> ``(which, i, d, val)``, which in {gx, gp, gq}:
     ``gh = 1[h>0] * rowsum(Wq)`` exact ints; gx a per-row exact dgemm;
-    gp/gq per-partition int64 partials merged by ``sum(long)``."""
-    wq = _mlp_wq(vec, cache_key=cache_key)
-    qs_int = wq.sum(axis=1).astype(np.int64)         # 1e6-scaled row sums
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((wq, qs_int))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, qs = b.value
-        d, k = w.shape
-        gp_acc = np.zeros((d, k), dtype=np.int64)
-        gq_acc = np.zeros(d, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            gh = (h_int > 0) * qs[None, :].astype(np.float64)
-            gx_num = gh @ w.T                        # exact: <= ~5.3e14
-            gp_acc += xq.astype(np.int64).T @ gh.astype(np.int64)
-            gq_acc += hs.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num.astype(np.int64)),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64), "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(np.repeat(gq_acc[:, None], k, axis=1)),
-        })
-
-    parts = _spread(vec.select("i", "vec")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    # gx/gp numerators 1e12-scaled; gq is a bare 1e6-scaled integer sum
-    micro = F.when(F.col("which") == "gq", F.col("num")).otherwise(
-        _micro_col("num", 1_000_000)
-    )
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+    gp/gq int64 partials merged by ``sum(long)``."""
+    parts = tile_fold(Fold(MLP_VJP, wq=_mlp_wq(vec, cache_key=cache_key)),
+                      vec.select("i", "vec"))
+    return _finish(parts, MLP_VJP)
 
 
 # ------------------------------------------------------- chained grads
-
-def _chain_pred(vec: DataFrame, wq: np.ndarray) -> DataFrame:
-    """Quantized MLP forward as a narrow map -> ``(i, vec, label)``
-    pred rows on the 1e6 grid (``vec = ps/1e6`` is integer-valued/1e6,
-    so the downstream gate's ``floor(v*1e6+.5)`` recovers ``ps``
-    exactly).  Same h/hs/y chain as :func:`mlp_gate`."""
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)          # exact: <= 6.4e13
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs @ w                           # exact: <= ~4.1e15
-            ps = np.floor(y_int / 1e12 * Q_IN + 0.5)
-            yield pd.DataFrame({
-                "i": pdf["i"].to_numpy(),
-                "vec": list(ps / Q_IN),
-                "label": pdf["label"].to_numpy(),
-            })
-
-    return _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "i long, vec array<double>, label long"
-    )
-
 
 def chain_grads_gate(
     vec: DataFrame,
@@ -1349,18 +884,23 @@ def chain_grads_gate(
 
     Three stages, each scale-shaped:
 
-    1. forward recompute ``pred = relu(X W) W`` — narrow map
-       (:func:`_chain_pred`), W the deterministic gram seed;
+    1. forward recompute ``pred = relu(X W) W`` — in-tile, from the X
+       rows (``Fold.pred_left``), W the deterministic gram seed;
     2. downstream vjp ``(gpred, gtrg) = dxentropy(pred, trg)`` — the
-       generalized (pred, trg) gate partials (:func:`_xe_grads_parts`),
-       broadcast or blocked-tile path, integer-merged;
-    3. upstream vjp: join the merged 1e12-scaled ``gpred`` numerators
-       back to the X rows (one co-partitioned shuffle), re-quantize to
-       the 1e6 grid (``gs``), and push through the MLP backward in one
-       narrow map: ``ga = gs W^T``; requantized ``gam``; relu mask
+       xentropy vjp legs over the (pred, trg) tiles;
+    3. upstream vjp: re-quantize the 1e12-scaled ``gpred`` numerators
+       to the 1e6 grid (``gs``) and push them through the MLP backward:
+       ``ga = gs W^T``; requantized ``gam``; relu mask
        ``ghq = 1[h>0] * gam``; then ``gx = ghq W^T`` per row and
-       map-side int64 accumulators for ``gp = X^T ghq`` and
-       ``gq = hs^T gs`` merged by ``sum(long)``.
+       int64 partials for ``gp = X^T ghq`` and ``gq = hs^T gs`` merged
+       by ``sum(long)``.
+
+    On the broadcast path every row's gpred is COMPLETE within its tile
+    (the full target table is broadcast), so all three stages are one
+    fold (r6 fusion): the only exchange left is the accumulator merge.
+    On the blocked path stage 3 reads the MERGED gpred, joined back to
+    the X rows (one co-partitioned shuffle).  Bit-identical: the merged
+    gpred of the blocked path is an exact sum of the same integers.
 
     Integer budget (|v|<=~1, D=64): softmax row mass bounds
     ``|gpred| <= 2e12`` -> ``gs <= 2e6``; ``ga <= D*2e6*1e6 = 1.3e14``
@@ -1379,217 +919,28 @@ def chain_grads_gate(
     float chain in :mod:`gemmsql.ops.chain` is the precision API.
     """
     wq = _mlp_wq(vec, cache_key=cache_key)
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if broadcast_trg:
-        # r6 fusion: in the broadcast path every row's gpred is COMPLETE
-        # within its batch (the full target table is broadcast), so the
-        # merge shuffle + row-id join that feed stage 3 exist only for
-        # the blocked path.  One narrow map computes forward, xe vjp
-        # and MLP backward together; the only exchange left is the
-        # final accumulator merge.  Bit-identical: the merged gpred of
-        # the unfused path is a sum over exactly one partial per row.
-        return _chain_grads_gate_fused(vec, wq)
-    pred = _chain_pred(vec, wq)
-    trg = vec.select("i", "vec")
-    parts_xe = _xe_grads_parts(
-        pred, trg, block=block, broadcast_trg=False
-    )
-    from gemmsql.caching import scoped_cache
+    x = vec.select("i", "vec", "label")
+    gtrg = XE_VJP[1]
+    bwd = _chain_vjp(fine=True)
+    if _broadcast(vec, broadcast_trg):
+        fold = Fold((gtrg, *bwd), wq=wq, pred_left=True, cot=lambda t: t.gpred)
+        parts = tile_fold(fold, x, vec, broadcast=True)
+    else:
+        from gemmsql.caching import scoped_cache
 
-    # merged once: gpred feeds stage 3, gtrg is a final leg
-    merged_xe = scoped_cache(
-        _merge_long_arrays(parts_xe, ["which", "i"]), fresh_scope=True
-    )
-    gs_rows = merged_xe.where(F.col("which") == "gpred").select("i", "nums")
-    joined = vec.select("i", "vec").join(gs_rows, "i")
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        wi = w.astype(np.int64)
-        d = w.shape[0]
-        gp_acc = np.zeros((d, d), dtype=np.int64)
-        gq_acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5).astype(np.int64)
-            nums = np.asarray(pdf["nums"].tolist(), dtype=np.float64)
-            gs = np.floor(nums / 1e12 * Q_IN + 0.5).astype(np.int64)
-            ga = gs @ wi.T                           # int64 exact
-            gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
-                           ).astype(np.int64)
-            ghq = np.where(h_int > 0, gam, np.int64(0))
-            gp_acc += xq.astype(np.int64).T @ ghq
-            gq_acc += hs.T @ gs
-            # gx on the fine 1e9 grid (per-row — no cross-row
-            # accumulation, so the bigger numerators fit int64)
-            gs9 = np.floor(nums / 1e12 * 1e9 + 0.5).astype(np.int64)
-            ga9 = gs9 @ wi.T                         # int64 exact
-            gam9 = np.floor(ga9.astype(np.float64) / 1e15 * 1e9 + 0.5
-                            ).astype(np.int64)
-            ghq9 = np.where(h_int > 0, gam9, np.int64(0))
-            gx_num = ghq9 @ wi.T                     # 1e15-scaled
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gq_acc),
-        })
-
-    parts_c = joined.mapInPandas(run, "which string, i long, nums array<long>")
-    gtrg_parts = merged_xe.where(F.col("which") == "gtrg")
-    merged = _merge_long_arrays(
-        parts_c.unionByName(gtrg_parts), ["which", "i"]
-    )
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    # gx runs on the 1e9 grid (1e15-scaled numerators); the rest 1e12
-    micro = F.when(
-        F.col("which") == "gx", _micro_col("num", 1_000_000_000)
-    ).otherwise(_micro_col("num", 1_000_000))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _chain_grads_gate_fused(vec: DataFrame, wq: np.ndarray) -> DataFrame:
-    """Broadcast-path fusion of :func:`chain_grads_gate`'s three
-    stages into ONE narrow map over the X rows: MLP forward (h, hs,
-    pred), xentropy vjp against the broadcast target table (delta,
-    gpred per row — complete in-batch — plus the cross-row gtrg
-    accumulator), and the MLP backward pushed immediately through the
-    in-hand h/hs/xq (gx per row on the fine 1e9 grid; gp/gq int64
-    accumulators).  Values are bit-identical to the unfused path — the
-    same integer grids in the same order, minus a no-op
-    sum-of-one-partial round trip through Spark longs (exact: all
-    numerators < 2^53).  Removes two exchanges and a second corpus
-    scan; the one shuffle left is the accumulator merge."""
-    rids, rq = _collect_kv(vec.select("i", "vec"))
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, pos, wq))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, posmap, w = b.value
-        wi = w.astype(np.int64)
-        n, d = rmat.shape
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        gp_acc = np.zeros((d, d), dtype=np.int64)
-        gq_acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # --- stage 1: MLP forward (mlp_gate chain) ---
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs_f = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs_f @ w
-            lq = np.floor(y_int / 1e12 * Q_IN + 0.5)  # == _quant(pred)
-            # --- stage 2: xentropy vjp vs the broadcast targets ---
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w_sm = e / S[:, None]
-            delta = np.floor(w_sm * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            nums = delta @ rmat                      # gpred, <= ~1.2e15
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            # --- stage 3: MLP backward (chain_grads_gate chain) ---
-            hs = hs_f.astype(np.int64)
-            gs = np.floor(nums / 1e12 * Q_IN + 0.5).astype(np.int64)
-            ga = gs @ wi.T
-            gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
-                           ).astype(np.int64)
-            ghq = np.where(h_int > 0, gam, np.int64(0))
-            gp_acc += xq.astype(np.int64).T @ ghq
-            gq_acc += hs.T @ gs
-            gs9 = np.floor(nums / 1e12 * 1e9 + 0.5).astype(np.int64)
-            ga9 = gs9 @ wi.T
-            gam9 = np.floor(ga9.astype(np.float64) / 1e15 * 1e9 + 0.5
-                            ).astype(np.int64)
-            ghq9 = np.where(h_int > 0, gam9, np.int64(0))
-            gx_num = ghq9 @ wi.T                     # 1e15-scaled
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gq_acc),
-        })
-        yield pd.DataFrame({"which": "gtrg", "i": _rids, "nums": list(gtrg_acc)})
-
-    parts = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = F.when(
-        F.col("which") == "gx", _micro_col("num", 1_000_000_000)
-    ).otherwise(_micro_col("num", 1_000_000))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-# ----------------------------------------- chained grads #2: att(mlp(x))
-
-# Softmax temperature for the composed op att(CHAIN2_SCALE * mlp(x)):
-# the gram-seeded MLP emits values ~1e-4 (measured at sf0.01/sf0.1), so
-# an unscaled self-attention over them would quantize to an exactly
-# uniform softmax (every e_int == 1e6) and the composition would gate
-# nothing.  Scaling the intermediate by 1e4 puts scores in O(1..100)
-# where the softmax — and its jacobian — are structurally non-trivial.
-# The gated quantity is grads of att(SCALE*mlp(x)) with cotangent
-# ones/SCALE: the two SCALEs cancel in the chain rule, so g_pred is
-# exactly the attention vjp evaluated at the scaled intermediate and no
-# extra rescaling enters the integer chain.
-CHAIN2_SCALE = 10_000
-
-
-def _chain_pred_scaled(vec: DataFrame, wq: np.ndarray) -> DataFrame:
-    """Quantized MLP forward, intermediate scaled by CHAIN2_SCALE on
-    the integer grid -> ``(i, vec)`` with ``vec = ps*SCALE/1e6`` (still
-    integer-valued/1e6, so downstream ``_quant`` recovers ``ps*SCALE``
-    exactly)."""
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs @ w
-            ps = np.floor(y_int / 1e12 * Q_IN + 0.5) * CHAIN2_SCALE
-            yield pd.DataFrame({
-                "i": pdf["i"].to_numpy(),
-                "vec": list(ps / Q_IN),
-            })
-
-    return _spread(vec.select("i", "vec")).mapInPandas(
-        run, "i long, vec array<double>"
-    )
+        # merged once: gpred feeds stage 3, gtrg is a final leg
+        merged = scoped_cache(
+            tile_fold(Fold(XE_VJP, wq=wq, pred_left=True), x, vec,
+                      broadcast=False, block=block),
+            fresh_scope=True,
+        )
+        joined = vec.select("i", "vec").join(
+            merged.where(F.col("which") == "gpred").select("i", "nums"), "i"
+        )
+        parts = tile_fold(Fold(bwd, wq=wq, cot=_cot_supplied), joined,
+                          spread=False,
+                          plus=merged.where(F.col("which") == "gtrg"))
+    return _finish(parts, (gtrg, *bwd))
 
 
 def chain2_grads_gate(
@@ -1612,18 +963,19 @@ def chain2_grads_gate(
     Chain-rule stages, each scale-shaped:
 
     1. forward recompute ``pred_s = SCALE * relu(X W) W`` — narrow map;
-    2. downstream vjp: the self-attention gradient partials over
-       ``pred_s`` (:func:`_attention_grads_parts`, broadcast or
-       blocked-tile path).  ``pred_s`` is Q, K AND V, so the
-       intermediate cotangent is the SUM of the three legs
+    2. downstream vjp: the self-attention vjp legs over ``pred_s``
+       (broadcast or blocked-tile path).  ``pred_s`` is Q, K AND V, so
+       the intermediate cotangent is the SUM of the three legs
        (multivariable chain rule): numerators combined exactly on the
        common 1e10 grid as ``gq + gk + 10*gv``;
-    3. upstream vjp: join the merged numerators to the X rows (one
-       co-partitioned shuffle) and push through the MLP backward in one
-       narrow map — ``gs = floor(nums/1e10 * 1e6 + .5)``;
-       ``ga = gs W^T`` (int64); requantized ``gam``; relu mask;
-       ``gx = ghq W^T`` per row; map-side int64 accumulators for
-       ``gp = X^T ghq`` and ``gq = hs^T gs`` merged by ``sum(long)``.
+    3. upstream vjp: the merged numerators reach the X rows — broadcast
+       as the right side of a narrow map (N <= BROADCAST_MAX_ROWS, same
+       bound as the attention broadcast side, ~4 MB) or joined on row id
+       (one co-partitioned shuffle) — and are pushed through the MLP
+       backward: ``gs = floor(nums/1e10 * 1e6 + .5)``; ``ga = gs W^T``
+       (int64); requantized ``gam``; relu mask; ``gx = ghq W^T`` per
+       row; int64 partials for ``gp = X^T ghq`` and ``gq = hs^T gs``
+       merged by ``sum(long)``.
 
     Integer budget (measured |pred_s| <= ~2, W grid <= ~2e4, N <= 8192):
     scores <= 64*(2e6)^2/1e12 ~ 2.6e2; gq row mass ``sum_k w = 1``
@@ -1634,89 +986,32 @@ def chain2_grads_gate(
     composed gradients here are O(1..100), not O(1e-4), so the coarse
     grid already carries ~8 significant digits."""
     wq = _mlp_wq(vec, cache_key=cache_key)
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    pred_s = _chain_pred_scaled(vec, wq)
-    parts = _attention_grads_parts(
-        pred_s, block=block, broadcast_kv=broadcast_kv, spread=False
-    )
-    # combine the three vjp legs on the common 1e10 grid (gv is 1e9)
-    combined = parts.select(
-        "i",
-        F.when(
-            F.col("which") == "gv",
-            F.transform("nums", lambda x: x * F.lit(10).cast("long")),
-        ).otherwise(F.col("nums")).alias("nums"),
-    )
-    gs_rows = _merge_long_arrays(combined, ["i"])
-    spark = vec.sparkSession
+    bcast = _broadcast(vec, broadcast_kv)
 
-    if broadcast_kv:
-        # the merged cotangent is N x D int64 with N <= BROADCAST_MAX_
-        # ROWS (same bound as the attention broadcast side, ~4 MB):
-        # collect + broadcast it and run stage 3 as a NARROW map over
-        # the X rows — no join, no second wide shuffle
-        gpdf = gs_rows.toPandas()
-        gmap = {
-            int(i): np.asarray(nums, dtype=np.float64)
-            for i, nums in zip(gpdf["i"], gpdf["nums"])
-        }
-        bg = spark.sparkContext.broadcast(gmap)
-    else:
-        bg = None
-    b = spark.sparkContext.broadcast(wq)
+    def forward(*tile):
+        t = _Tile(Fold(wq=wq), *tile)
+        return pd.DataFrame({"i": t.lids,
+                             "vec": list(t.pred * CHAIN2_SCALE / Q_IN)})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        wi = w.astype(np.int64)
-        d = w.shape[0]
-        gp_acc = np.zeros((d, d), dtype=np.int64)
-        gq_acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(_vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5).astype(np.int64)
-            if bg is not None:
-                g = bg.value
-                nums = np.stack([g[int(i)] for i in pdf["i"]])
-            else:
-                nums = np.asarray(pdf["nums"].tolist(), dtype=np.float64)
-            gs = np.floor(nums / 1e10 * Q_IN + 0.5).astype(np.int64)
-            ga = gs @ wi.T                           # int64 exact
-            gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
-                           ).astype(np.int64)
-            ghq = np.where(h_int > 0, gam, np.int64(0))
-            gp_acc += xq.astype(np.int64).T @ ghq
-            gq_acc += hs.T @ gs
-            gx_num = ghq @ wi.T                      # 1e12-scaled
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gq_acc),
-        })
-
-    if bg is not None:
-        src = _spread(vec.select("i", "vec"))
+    pred_s = broadcast_right_partials(vec.select("i", "vec"), None, forward,
+                                      "i long, vec array<double>")
+    gq, gk, gv = ATT_VJP
+    cot_legs = (gq._replace(name="g"), gk._replace(name="g"),
+                gv._replace(name="g", fn=lambda t: 10 * gv.fn(t)))
+    # pred_s is already spread by its own map
+    cot = tile_fold(Fold(cot_legs), pred_s, pred_s, broadcast=bcast,
+                    block=block, spread=False).select("i", "nums")
+    bwd = _chain_vjp(fine=False)
+    fold = Fold(bwd, wq=wq, cot=_cot_supplied, cot_scale=1e10)
+    if bcast:
+        parts = tile_fold(fold, vec.select("i", "vec"),
+                          cot.select("i", F.col("nums").alias("vec")),
+                          broadcast=True)
     else:
         from gemmsql.caching import scoped_cache
 
-        src = vec.select("i", "vec").join(
-            scoped_cache(gs_rows, fresh_scope=True), "i"
+        joined = vec.select("i", "vec").join(
+            scoped_cache(cot, fresh_scope=True), "i"
         )
-    parts_c = src.mapInPandas(run, "which string, i long, nums array<long>")
-    merged = _merge_long_arrays(parts_c, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+        parts = tile_fold(fold, joined, spread=False)
+    return _finish(parts, bwd)

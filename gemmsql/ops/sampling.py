@@ -379,9 +379,9 @@ def sampling_filtered(
             (pdf, _rids, _rmat) for pdf in batches if len(pdf)
         )
 
-    from gemmsql.ops.gate import _spread
+    from gemmsql.ops._blocked import spread
 
-    out = _spread(pred_vec.select("i", "vec")).mapInPandas(
+    out = spread(pred_vec.select("i", "vec")).mapInPandas(
         run, "which string, i long, choice long, prob double"
     )
     return out.select("which", "i", "choice", F.round("prob", 6).alias("prob"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JError
 
 _CACHE: dict[tuple[str, str], tuple[int, int]] = {}
 
@@ -148,18 +149,42 @@ def _scan_chain(df):
         return None
 
 
+def _parquet_files(chain, df) -> list[str]:
+    """Local parquet paths under the scan that ends ``chain``: the file
+    relation's own listing, which (unlike ``df.inputFiles()``) does not
+    optimize the plan first."""
+    try:
+        uris = list(chain[-1].relation().inputFiles())
+    except Py4JError:  # not a file-source relation (e.g. a v2 scan)
+        uris = df.inputFiles()
+    return [f for f in map(_local_path, uris) if f.endswith(".parquet")]
+
+
 def frame_rows(df) -> int | None:
     """Exact row count of ``df`` from parquet footers when its plan is a
     pure projection over one parquet relation; None otherwise.  Never
     launches a Spark job."""
-    if _scan_chain(df) is None:
+    chain = _scan_chain(df)
+    if chain is None:
         return None
     try:
-        files = [_local_path(f) for f in df.inputFiles()]
-        files = [f for f in files if f.endswith(".parquet")]
+        files = _parquet_files(chain, df)
         if not files:
             return None
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except Exception:
+        return None
+
+
+def frame_bytes(df) -> int | None:
+    """Total size of the parquet files under ``df`` when its plan is a
+    pure projection over one parquet relation; None otherwise.  Never
+    launches a Spark job."""
+    chain = _scan_chain(df)
+    if chain is None:
+        return None
+    try:
+        return sum(os.path.getsize(f) for f in _parquet_files(chain, df))
     except Exception:
         return None
 
@@ -211,9 +236,7 @@ def frame_list_dim(df, col: str) -> int | None:
     if src is None:
         return None
     try:
-        files = [_local_path(f) for f in df.inputFiles()]
-        files = [f for f in files if f.endswith(".parquet")]
-        for f in files:
+        for f in _parquet_files(chain, df):
             pf = pq.ParquetFile(f)
             if pf.metadata.num_rows == 0:
                 continue

@@ -244,6 +244,19 @@ def test_chain_grads_gate_blocked_matches_broadcast(spark):
     assert _hash(a.toPandas()) == _hash(b.toPandas())
 
 
+def test_chain2_grads_gate_blocked_matches_broadcast(spark):
+    """chain2_grads: the attention vjp over the scaled MLP output must
+    be byte-identical on the broadcast and blocked-tile paths — stage 3
+    consumes the MERGED cotangent numerators, so neither the tile order
+    nor the broadcast-vs-join hand-off can leak into the MLP backward."""
+    from gemmsql.ops.gate import chain2_grads_gate
+
+    vec = _vec(spark)
+    a = chain2_grads_gate(vec, block=96, broadcast_kv=True)
+    b = chain2_grads_gate(vec, block=96, broadcast_kv=False)
+    assert _hash(a.toPandas()) == _hash(b.toPandas())
+
+
 def test_chain_grads_gate_close_to_float_chain(spark, emb_matrix):
     """The quantized end-to-end chain must approximate the analytic
     float chain rule (inputs on the 1e-6 grid -> O(1e-3) drift through

@@ -157,7 +157,7 @@ def test_attention_blocked_single_merge_aggregate(spark):
 def test_attention_auto_broadcast_kv_is_narrow(spark):
     """Small KV -> the auto strategy must pick the broadcast path: a
     mapInPandas kernel fed by exactly ONE byte-light round-robin
-    spread (gate._spread, r18 — without it the single-partition scan
+    spread (_blocked.spread, r18 — without it the single-partition scan
     serializes the kernel on one core) and nothing else — no hash
     shuffle, no join below the kernel."""
     from gemmsql.datamodel import embeddings_vectors
@@ -173,6 +173,40 @@ def test_attention_auto_broadcast_kv_is_narrow(spark):
     )
     assert "hashpartitioning" not in below.lower()
     assert "roundrobin" in below.lower(), "the spread must be round-robin"
+
+
+def test_spread_skips_already_wide_inputs(spark):
+    """The broadcast-kernel spread adds its one round-robin exchange only
+    in front of an input narrower than its target: the single-partition
+    scan gets exactly one; an input already at least defaultParallelism
+    wide (an upstream shuffle, or a scan split by
+    spark.sql.files.maxPartitionBytes) gets none — on its own or inside
+    a broadcast-path gate."""
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops._blocked import spread
+    from gemmsql.ops.gate import attention_gate
+
+    rr = "RoundRobinPartitioning"
+    vec = embeddings_vectors(spark, SF_SMOKE).select("i", "vec")
+    assert plan_of(spread(vec)).count(rr) == 1
+    assert plan_of(attention_gate(vec, vec)).count(rr) == 1
+
+    # a second repartition would collapse into the first, so the pin is
+    # on the width: the input's own exchange, unchanged and alone
+    n = max(8, spark.sparkContext.defaultParallelism)
+    wide = vec.repartition(n)
+    for p in (plan_of(spread(wide)), plan_of(attention_gate(wide, vec))):
+        assert p.count(rr) == 1 and f"{rr}({n})" in p, "no second spread"
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        split = embeddings_vectors(spark, SF_SMOKE).select("i", "vec")
+        assert split.rdd.getNumPartitions() >= 2
+        assert rr not in plan_of(spread(split)), "a split scan is wide"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_bucketed_table_join_skips_exchange(spark, tmp_path):
@@ -623,7 +657,7 @@ def test_corpus_diff_single_copartitioned_join(spark):
 def test_sampling_filtered_single_narrow_pass(spark):
     """Restriction + Gumbel pick resolve in-row against the broadcast
     class table: one mapInPandas fed by the one round-robin spread
-    (gate._spread, r18 — the single-partition scan otherwise
+    (_blocked.spread, r18 — the single-partition scan otherwise
     serializes the kernel on one core), no hash shuffle, no window
     exec."""
     from gemmsql.datamodel import embeddings_vectors
@@ -1025,7 +1059,7 @@ def test_ml_gate_exchange_budgets(spark):
     import __spark_entry__ as entrymod
 
     # r18 re-pin: every broadcast-path kernel now rides ONE byte-light
-    # round-robin spread exchange before the NumPy map (gate._spread) —
+    # round-robin spread exchange before the NumPy map (_blocked.spread) —
     # the KB-scale vector scan is a single partition, so the kernels
     # were serializing on one core (the measured reason the whole ML
     # tier showed 8-core == 32-core scaling in PERF_r17).  +1 per
@@ -1055,6 +1089,69 @@ def test_ml_gate_exchange_budgets(spark):
         assert n <= budget, (
             f"{name}: {n} exchanges in the physical plan, budget is "
             f"{budget} — a shuffle crept in"
+        )
+
+
+def test_gate_blocked_path_exchange_budgets(spark):
+    """The same hard ceilings for the gates' BLOCKED tile paths, which
+    the registry never reaches at the smoke tier (every table there is
+    under the broadcast cutover).  Budgets are the current counts: a
+    refactor may lower one, never raise one.  Counts include the
+    block-id broadcasts and the reused exchanges the plan string
+    repeats, so they are plan-shape fingerprints rather than shuffle
+    counts."""
+    from pyspark.sql import functions as F
+
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops import gate
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    v = vec.select("i", "vec")
+    v_rev = v.select("i", F.reverse("vec").alias("vec"))
+    builds = {
+        "attention": lambda: gate.attention_gate(
+            v, v, scale=True, block=96, broadcast_kv=False),
+        "attention_kv": lambda: gate.attention_gate(
+            v, v, v_vec=v_rev, block=96, broadcast_kv=False),
+        "attention_plain_kv": lambda: gate.attention_gate_plain_kv(
+            v, v, v_rev, broadcast_kv=False),
+        "attention_grads": lambda: gate.attention_grads_gate(
+            v, block=96, broadcast_kv=False),
+        "xentropy": lambda: gate.xentropy_gate(
+            vec, block=96, broadcast_trg=False),
+        "entropy": lambda: gate.entropy_gate(
+            vec, block=96, broadcast_trg=False),
+        "xentropy_grads": lambda: gate.xentropy_grads_gate(
+            vec, block=96, broadcast_trg=False),
+        "attention_xe_grads_fused": lambda: gate.attention_xe_grads_gate_fused(
+            vec, broadcast_kv=False),
+        "ml_grads_fused": lambda: gate.ml_grads_gate_fused(
+            vec, broadcast_kv=False),
+        "chain_grads": lambda: gate.chain_grads_gate(
+            vec, block=96, broadcast_trg=False),
+        "chain2_grads": lambda: gate.chain2_grads_gate(
+            vec, block=96, broadcast_kv=False),
+    }
+    budgets = {
+        "attention": 20,
+        "attention_kv": 26,
+        "attention_plain_kv": 26,
+        "attention_grads": 60,
+        "xentropy": 20,
+        "entropy": 60,
+        "xentropy_grads": 60,
+        "attention_xe_grads_fused": 60,
+        "ml_grads_fused": 61,
+        "chain_grads": 122,
+        "chain2_grads": 98,
+    }
+    assert set(builds) == set(budgets)
+    for name, budget in budgets.items():
+        p = plan_of(builds[name]())
+        n = p.count("Exchange ")
+        assert n <= budget, (
+            f"{name} (blocked): {n} exchanges in the physical plan, "
+            f"budget is {budget} — a shuffle crept in"
         )
 
 
