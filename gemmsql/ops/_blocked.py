@@ -39,9 +39,11 @@ def _partitions(df: DataFrame) -> int:
     """A lower bound on ``df``'s partition count, found without running a
     job (0 if unknown).  A projection over parquet files splits them
     into at least ``bytes / spark.sql.files.maxPartitionBytes``
-    partitions.  An adaptive plan (any plan with an exchange) states
-    the partitioning its root exchange plans; asking its RDD instead
-    would run the stages below that exchange."""
+    partitions.  Above an exchange only a user ``repartition(n)``
+    (shuffle origin REPARTITION_BY_NUM) keeps its planned width: AQE
+    coalesces a join or aggregate shuffle at run time, a KB-scale one
+    to about one partition, so those count as unknown.  Asking the RDD
+    instead would run the stages below the exchange."""
     from gemmsql.stats import frame_bytes
 
     size = frame_bytes(df)
@@ -49,9 +51,16 @@ def _partitions(df: DataFrame) -> int:
         conf = df.sparkSession._jsparkSession.sessionState().conf()
         return -(-size // conf.filesMaxPartitionBytes())
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        return plan.inputPlan().outputPartitioning().numPartitions()
-    return 0
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return 0
+    root = node = plan.inputPlan()
+    while node.getClass().getSimpleName() != "ShuffleExchangeExec":
+        if node.children().size() != 1:
+            return 0
+        node = node.children().head()
+    if node.shuffleOrigin().toString() != "REPARTITION_BY_NUM":
+        return 0
+    return root.outputPartitioning().numPartitions()
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -72,8 +81,10 @@ def spread(df: DataFrame) -> DataFrame:
     fused grads) under-parallelized at small N on few-core boxes.
 
     An input that already has at least that many partitions (a
-    many-file scan, an upstream shuffle) is returned unchanged: the
-    exchange would only move the whole payload to end up no wider."""
+    many-file scan, an upstream ``repartition(n)``) is returned
+    unchanged: the exchange would only move the whole payload to end up
+    no wider.  A join or aggregate output is still spread, since AQE
+    may coalesce its shuffle to one partition (:func:`_partitions`)."""
     from gemmsql.stats import frame_rows
 
     n = frame_rows(df)

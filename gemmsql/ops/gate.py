@@ -451,7 +451,6 @@ def tile_fold(
     broadcast: bool | str = "auto",
     block: int = 4096,
     spread: bool = True,
-    plus: DataFrame | None = None,
 ) -> DataFrame:
     """Fold ``fold``'s legs over every (left, right) tile -> the merged
     int64 partials ``(which, i, nums[, mx])``, each key complete.
@@ -464,8 +463,7 @@ def tile_fold(
     count); the blocked path runs the :func:`_row_stats` sweeps, then
     the legs per ``block`` x ``block`` tile, with row-local legs folded
     once per row.  ``spread`` fans the left rows out before a
-    broadcast-path kernel.  ``plus`` is already-folded partials merged
-    in with this fold's."""
+    broadcast-path kernel."""
     extra = tuple(c for c in left.columns if c not in ("i", "vec"))
     schema = PARTS + (", mx double" if fold.row_max else "")
     if right is not None:
@@ -494,10 +492,8 @@ def tile_fold(
             left, right, _kernel(fold, fold.legs), schema,
             left_extra=extra, spread_left=spread,
         )
-        if plus is None and all(leg.side == L for leg in fold.legs):
+        if all(leg.side == L for leg in fold.legs):
             return parts   # one partial per (which, i): already complete
-    if plus is not None:
-        parts = parts.unionByName(plus)
     return _merge(parts, fold.row_max)
 
 
@@ -937,9 +933,9 @@ def chain_grads_gate(
         joined = vec.select("i", "vec").join(
             merged.where(F.col("which") == "gpred").select("i", "nums"), "i"
         )
-        parts = tile_fold(Fold(bwd, wq=wq, cot=_cot_supplied), joined,
-                          spread=False,
-                          plus=merged.where(F.col("which") == "gtrg"))
+        parts = tile_fold(
+            Fold(bwd, wq=wq, cot=_cot_supplied), joined, spread=False
+        ).unionByName(merged.where(F.col("which") == "gtrg"))
     return _finish(parts, (gtrg, *bwd))
 
 

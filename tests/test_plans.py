@@ -178,8 +178,9 @@ def test_attention_auto_broadcast_kv_is_narrow(spark):
 def test_spread_skips_already_wide_inputs(spark):
     """The broadcast-kernel spread adds its one round-robin exchange only
     in front of an input narrower than its target: the single-partition
-    scan gets exactly one; an input already at least defaultParallelism
-    wide (an upstream shuffle, or a scan split by
+    scan and a join or aggregate output get exactly one; an input
+    already at least defaultParallelism wide (an upstream
+    ``repartition(n)``, or a scan split by
     spark.sql.files.maxPartitionBytes) gets none — on its own or inside
     a broadcast-path gate."""
     from gemmsql.datamodel import embeddings_vectors
@@ -197,6 +198,17 @@ def test_spread_skips_already_wide_inputs(spark):
     wide = vec.repartition(n)
     for p in (plan_of(spread(wide)), plan_of(attention_gate(wide, vec))):
         assert p.count(rr) == 1 and f"{rr}({n})" in p, "no second spread"
+
+    # a join, aggregate or column-repartition shuffle is no proof of
+    # width: AQE coalesces a KB-scale one to about one partition at run
+    # time, so it is spread
+    from pyspark.sql import functions as F
+
+    grouped = vec.groupBy("i").agg(F.first("vec").alias("vec"))
+    joined = vec.join(vec.select("i"), "i")
+    for df in (grouped, joined, vec.repartition("i")):
+        assert plan_of(spread(df)).count(rr) == 1, "a shuffle output spreads"
+    assert plan_of(attention_gate(grouped, vec)).count(rr) == 1
 
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
